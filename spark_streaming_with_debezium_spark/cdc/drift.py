@@ -25,7 +25,7 @@ This module closes the loop:
   columns, retyped columns (split into lossless widenings vs
   incompatible changes).
 - :func:`evolve_spec` / :func:`apply_drift` — the decision point:
-  additive drift auto-extends the parquet state (sidecar-schema
+  additive drift auto-extends the parquet state (stored-schema
   evolution via ``ParquetStateTable.evolve`` — old bucket files stay
   untouched, read NULL-filled) and returns the widened ``TableSpec``
   for subsequent parses; destructive drift raises
@@ -283,7 +283,7 @@ def apply_drift(
 
     - no drift → ``spec`` unchanged.
     - additive/widening drift, ``policy='evolve'`` → evolve the state
-      table's sidecar schema (old bucket files untouched; they read
+      table's stored schema (old bucket files untouched; they read
       NULL-filled / upcast) and return the widened spec.
     - incompatible drift, or any drift under ``policy='strict'`` →
       :class:`SchemaDriftError` (dead-letter the batch; a narrowed

@@ -20,6 +20,13 @@ Envelope shape (Debezium 1.x, schemas enabled —
     value IS NULL           -- tombstone after a delete; dropped
                             -- (reference: DebeziumDeltaFormatter.scala:18)
 
+The JSON converter with ``schemas.enable=false`` writes the same
+payloads without the wrapper (``key = {<key cols>}``, ``value =
+{"before": …, "after": …, …}``). Both forms parse with one
+``from_json`` per column: the envelope schema carries the payload
+fields both under ``payload`` and at the top level, and every field is
+read from whichever is set.
+
 The reference hardcodes one table's schema
 (`DebeziumDeltaFormatter.scala:59-65`, acknowledged as a TODO in its
 README:51); ``TableSpec`` is the dynamic registry it never built.
@@ -366,11 +373,22 @@ def envelope_value_schema(row_schema: T.StructType) -> T.StructType:
             T.StructField("ts_ms", T.LongType()),
         ]
     )
-    return T.StructType([T.StructField("payload", payload)])
+    return _either_form(payload)
 
 
 def envelope_key_schema(key_schema: T.StructType) -> T.StructType:
-    return T.StructType([T.StructField("payload", key_schema)])
+    return _either_form(key_schema)
+
+
+def _either_form(payload: T.StructType) -> T.StructType:
+    """``payload`` wrapped (schemas.enable=true) and bare (false)."""
+    return T.StructType([T.StructField("payload", payload), *payload.fields])
+
+
+def _field(envelope: str, path: str) -> Column:
+    """``path`` of a parsed envelope in either converter form — no
+    envelope sets both the wrapper and the top-level fields."""
+    return F.coalesce(F.col(f"{envelope}.payload.{path}"), F.col(f"{envelope}.{path}"))
 
 
 def _key_schema_of(spec: TableSpec) -> T.StructType:
@@ -385,7 +403,7 @@ def dead_letters(
     value_col: str = "value",
 ) -> DataFrame:
     """Malformed change events: value present but the envelope failed to
-    parse (no payload.op). These rows are silently DROPPED by the merge
+    parse (no op, wrapped or not). These rows are silently DROPPED by the merge
     path; route this DataFrame to a quarantine sink so a poison message
     never stalls the stream (the at-scale alternative to failing the
     job on one bad record)."""
@@ -393,9 +411,7 @@ def dead_letters(
     parsed = raw.filter(F.col(value_col).isNotNull()).withColumn(
         "_v", F.from_json(F.col(value_col).cast("string"), val_schema)
     )
-    return parsed.filter(
-        F.col("_v").isNull() | F.col("_v.payload.op").isNull()
-    ).drop("_v")
+    return parsed.filter(F.col("_v").isNull() | _field("_v", "op").isNull()).drop("_v")
 
 
 def parse_envelope(
@@ -473,30 +489,29 @@ def parse_envelope(
         # All three sources are wire-typed, so decode AFTER coalescing.
         return spec.decode_col(
             F.coalesce(
-                F.col(f"_k.payload.{k}"),
-                F.col(f"_v.payload.after.{k}"),
-                F.col(f"_v.payload.before.{k}"),
+                _field("_k", k), _field("_v", f"after.{k}"), _field("_v", f"before.{k}")
             ),
             k,
         ).alias(k)
 
     cols: list[Column] = [key_expr(k) for k in spec.key_cols]
     cols += [
-        spec.decode_col(F.col(f"_v.payload.after.{c}"), c).alias(c)
+        spec.decode_col(_field("_v", f"after.{c}"), c).alias(c)
         for c in spec.data_cols
         if c not in spec.key_cols
     ]
     if include_before:
         cols += [
-            spec.decode_col(F.col(f"_v.payload.before.{c}"), c).alias(f"before_{c}")
+            spec.decode_col(_field("_v", f"before.{c}"), c).alias(f"before_{c}")
             for c in spec.data_cols
             if c not in spec.key_cols
         ]
+    op, ts_ms = _field("_v", "op"), _field("_v", "ts_ms")
     cols += [
-        F.col("_v.payload.op").alias("op"),
-        F.col("_v.payload.ts_ms").alias("ts_ms"),
-        F.timestamp_millis(F.col("_v.payload.ts_ms")).alias("ts"),
-        (F.col("_v.payload.op") == F.lit("d")).alias("deleted"),
+        op.alias("op"),
+        ts_ms.alias("ts_ms"),
+        F.timestamp_millis(ts_ms).alias("ts"),
+        (op == F.lit("d")).alias("deleted"),
     ]
     cols += [F.col(c) for c in seq_cols]
     # Drop rows the envelope parser couldn't type (op missing): they are

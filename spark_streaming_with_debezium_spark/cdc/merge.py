@@ -15,21 +15,20 @@ hinted via ``broadcast_changes``).
 
 Scale notes (100 TB state):
 - The expensive part is rewriting state. ``apply_changes`` is the pure
-  dataframe→dataframe kernel; ``merge_into_parquet`` adds the storage
+  dataframe→dataframe kernel; ``ParquetStateTable`` adds the storage
   strategy: state is hash-bucketed into ``n_buckets`` by key, only
   buckets actually containing changed keys are rewritten (computed by
   projecting bucket ids from the change batch), the rest are untouched
-  files. That bounds each micro-batch's I/O to O(touched buckets), not
-  O(state) — the same file-skipping idea Delta's merge gets from its
-  log, on plain parquet.
+  files, and one manifest per commit names every bucket's directory.
+  That bounds each micro-batch's I/O to O(touched buckets), not
+  O(state), and makes it atomic — the file skipping and the commit
+  Delta's merge gets from its log, on plain parquet.
 - Reference defect §2.11-6 (unmatched DELETE inserts an empty row) is
   fixed: inserts are filtered to non-deleted rows.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 
 def apply_changes(
@@ -104,23 +104,34 @@ def bucket_of(df: DataFrame, key_cols: Sequence[str], n_buckets: int) -> DataFra
     return df.withColumn("_bucket", F.pmod(h, F.lit(n_buckets)).cast("int"))
 
 
+_BUCKET = "bucket/"  # manifest entry prefix: bucket/<b> → that bucket's directory
+
+
 class ParquetStateTable:
     """Keyed mutable state on plain parquet, hash-bucketed by key.
 
     The engine's stand-in for the reference's Delta table
     (`StreamingJobExecutor.scala:18`): ``merge`` rewrites only the
-    buckets that contain changed keys (partition-overwrite), so
-    per-batch I/O is proportional to touched buckets. At 100 TB with
-    n_buckets=8192 and a typical CDC batch touching a few thousand
-    keys, a merge rewrites well under 1% of the table.
+    buckets that contain changed keys, so per-batch I/O is proportional
+    to touched buckets. At 100 TB with n_buckets=8192 and a typical CDC
+    batch touching a few thousand keys, a merge rewrites well under 1%
+    of the table.
 
-    Storage: every file operation in the commit protocol goes through
-    :class:`~spark_streaming_with_debezium_spark.storage.fs.StateFS`,
-    selected by the path's URI scheme — a bare local path uses POSIX,
-    while ``hdfs://``/``s3a://``/``file://`` paths use the Hadoop
-    FileSystem client, so the same park/land/drop swap runs against the
-    lake the reference targets (`StreamingJobExecutor.scala:18`), not
-    just an ext4 mount.
+    Storage: a :class:`~spark_streaming_with_debezium_spark.storage.
+    manifest.Manifest` store at ``path``. Each bucket's rows live in one
+    immutable directory (``data-v<N>/_bucket=<b>``, written by the
+    commit that last rewrote the bucket); the manifest names every
+    bucket's directory and holds the table schema and bucket count.
+    ``init``, ``merge``, ``evolve`` and ``rebucket`` each write new
+    directories and publish ONE manifest, so a reader sees the table
+    before the operation or after it, never a mix, and a crash at any
+    step loses nothing: reopening finds the last published version.
+    Readers read bucket directories by path from the manifest. File
+    operations go through ``StateFS``, chosen by the path's URI scheme,
+    so the same commit runs on a POSIX mount or through the Hadoop
+    client (``hdfs://``, ``s3a://``, ``file://``). The root belongs to
+    the table: a commit deletes anything under it the manifest does not
+    name.
     """
 
     def __init__(
@@ -135,166 +146,100 @@ class ParquetStateTable:
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
         self.key_cols = list(key_cols)
-        self.n_buckets = n_buckets
-        self._recover_rebucket()
+        self._n_buckets = n_buckets
+
+    def _manifest(self) -> Manifest:
+        return Manifest.open(self.fs, self.path)
+
+    def _n(self, m: Manifest) -> int:
         # The STORED bucket count wins over the constructor arg: after a
         # rebucket, a reader opening with a stale n_buckets would prune
         # and write buckets under the WRONG modulus (silent key loss).
-        stored_n = self._stored_n_buckets()
-        if stored_n is not None:
-            self.n_buckets = stored_n
+        return m.meta.get("n_buckets", self._n_buckets)
 
     @property
-    def _meta_file(self) -> str:
-        return os.path.join(self.path, "_table_meta.json")
+    def n_buckets(self) -> int:
+        return self._n(self._manifest())
 
-    def _stored_n_buckets(self) -> int | None:
-        if self.fs.exists(self._meta_file):
-            return int(json.loads(self.fs.read_text(self._meta_file))["n_buckets"])
-        return None
+    def _buckets(self, m: Manifest) -> dict[int, str]:
+        return {int(b): d for b, d in m.named(_BUCKET).items()}
 
-    def _write_meta(self, target_dir: str, n_buckets: int) -> None:
-        self.fs.write_text_atomic(
-            os.path.join(target_dir, "_table_meta.json"),
-            json.dumps({"n_buckets": n_buckets}),
-        )
+    def _schema(self, m: Manifest) -> T.StructType:
+        if "schema" not in m.meta:
+            raise FileNotFoundError(f"state table {self.path} not initialized")
+        return T.StructType.fromJson(m.meta["schema"])
 
-    def _recover_rebucket(self) -> None:
-        """Crash recovery for :meth:`rebucket`'s whole-table swap: the
-        parked old layout still present means the swap may not have
-        finished — if the live path is missing, roll BACK (restore the
-        parked layout); otherwise the swap completed and the parked
-        copy is garbage. A half-written new layout (never swapped in)
-        is always garbage."""
-        old_dir = self.path + "_rebucket_old"
-        new_dir = self.path + "_rebucket_new"
-        if self.fs.exists(old_dir):
-            if not self.fs.exists(self.path):
-                self.fs.rename(old_dir, self.path)
-            else:
-                self.fs.delete(old_dir)
-        self.fs.delete(new_dir)
+    def _read(self, m: Manifest, buckets=None) -> DataFrame:
+        """The rows of ``buckets`` (all when None), read by path. The
+        stored schema is explicit: after ``evolve`` bucket files written
+        before it lack the added columns (read as NULL) or hold narrower
+        numerics (upcast on read)."""
+        schema = self._schema(m)
+        dirs = [
+            d for b, d in sorted(self._buckets(m).items())
+            if buckets is None or b in buckets
+        ]
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
+    def _write(self, m: Manifest, bucketed: DataFrame, replaced) -> dict:
+        """Write ``bucketed`` (with a ``_bucket`` column) into a new
+        directory. Returns the entry updates: every bucket written points
+        at its new directory, and every bucket in ``replaced`` that came
+        out empty is dropped."""
+        updates: dict[str, str | None] = {f"{_BUCKET}{b}": None for b in replaced}
+        for b, d in m.write_partitioned(bucketed, "data", "_bucket").items():
+            updates[_BUCKET + b] = d
+        return updates
+
+    def exists(self) -> bool:
+        return "schema" in self._manifest().meta
+
+    def read(self) -> DataFrame:
+        return self._read(self._manifest())
 
     def rebucket(self, new_n_buckets: int) -> None:
         """Online bucket-count migration: rewrite the WHOLE table into a
-        ``new_n_buckets`` hash layout and swap it in atomically — the
+        ``new_n_buckets`` hash layout, published in one commit — the
         operational move when a table outgrows its bucket count (bucket
         files past a few hundred MB make the touched-bucket rewrite
         coarse) or shrinks far below it (tiny-file overhead). One full
-        read + one partitioned write (the same cost as init), no
-        merge downtime: call between micro-batches from the single
-        writer, exactly like :meth:`compact_buckets`. The new count is
-        persisted in the table's meta sidecar, so every later reader
-        and writer — whatever n_buckets its constructor guessed — uses
-        the stored modulus."""
+        read + one partitioned write (the same cost as init); call
+        between micro-batches from the single writer. The new count is
+        stored in the manifest, so every later reader and writer —
+        whatever n_buckets its constructor guessed — uses it."""
         if new_n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
-        df = self.read()
-        schema = self._stored_schema()
-        new_dir = self.path + "_rebucket_new"
-        old_dir = self.path + "_rebucket_old"
-        self.fs.delete(new_dir)
-        bucketed = bucket_of(df, self.key_cols, new_n_buckets)
-        bucketed.repartition(new_n_buckets, F.col("_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(new_dir)
-        if schema is not None:
-            self.fs.write_text_atomic(
-                os.path.join(new_dir, "_table_schema.json"),
-                json.dumps(schema.jsonValue()),
-            )
-        self._write_meta(new_dir, new_n_buckets)
-        # swap: park old, land new, drop old — recovery handles a crash
-        # between any two steps (_recover_rebucket rolls back/forward)
-        self.fs.rename(self.path, old_dir)
-        self.fs.rename(new_dir, self.path)
-        self.fs.delete(old_dir)
-        self.n_buckets = new_n_buckets
-
-    def exists(self) -> bool:
-        return self.fs.exists(self.path)
-
-    @property
-    def _schema_file(self) -> str:
-        return os.path.join(self.path, "_table_schema.json")
-
-    def _stored_schema(self) -> T.StructType | None:
-        if self.fs.exists(self._schema_file):
-            return T.StructType.fromJson(
-                json.loads(self.fs.read_text(self._schema_file))
-            )
-        return None
-
-    def _read_bucketed(self) -> DataFrame:
-        # An empty state (fresh table, or all rows deleted) has no parquet
-        # files to infer from — fall back to the schema sidecar.
-        schema = self._stored_schema()
-        has_data = self.exists() and any(
-            e.startswith("_bucket=") for e in self.fs.listdir(self.path)
+        m = self._manifest()
+        bucketed = bucket_of(self._read(m), self.key_cols, new_n_buckets)
+        updates = self._write(
+            m, bucketed.repartition(new_n_buckets, F.col("_bucket")), self._buckets(m)
         )
-        if has_data:
-            if schema is not None:
-                # Explicit sidecar schema: after a type widening, bucket
-                # files of BOTH widths coexist; schema inference would
-                # pick one footer and fail on the other width, while the
-                # declared (widened) schema upcasts narrow files on read.
-                read_schema = T.StructType(
-                    list(schema.fields) + [T.StructField("_bucket", T.IntegerType())]
-                )
-                df = self.spark.read.schema(read_schema).parquet(self.path)
-            else:
-                df = self.spark.read.parquet(self.path)
-            if "_bucket" not in df.columns:  # pragma: no cover
-                df = bucket_of(df, self.key_cols, self.n_buckets)
-            # post-evolve: files written before a schema widening lack the
-            # new columns; align to the sidecar schema (NULL-filled)
-            return self._align_to_schema(df)
-        if schema is None:
-            raise FileNotFoundError(
-                f"state table {self.path} not initialized (no data, no schema)"
-            )
-        empty_schema = T.StructType(
-            list(schema.fields) + [T.StructField("_bucket", T.IntegerType())]
-        )
-        return self.spark.createDataFrame([], empty_schema)
-
-    def read(self) -> DataFrame:
-        return self._read_bucketed().drop("_bucket")
+        m.commit(updates, n_buckets=new_n_buckets)
 
     def init(self, snapshot: DataFrame) -> None:
         """Bootstrap from a snapshot (the reference's initial-load job,
         `StreamingJobInitialExecutor.scala:44-51`, minus its per-batch
-        append quirks: one partitioned write)."""
+        append quirks: one partitioned write). Replaces any earlier
+        contents; ``snapshot`` may read the table itself."""
+        m = self._manifest()
+        updates, meta = self._init_updates(m, snapshot)
+        m.commit(updates, **meta)
+
+    def _init_updates(self, m: Manifest, snapshot: DataFrame) -> tuple[dict, dict]:
+        n = self._n(m)
+        meta = {"schema": snapshot.schema.jsonValue(), "n_buckets": n}
         if snapshot.isEmpty():
             # Empty bootstrap (fresh incremental table): a distributed
-            # write of zero rows produces exactly an empty dir + the
-            # schema sidecar, but costs a full Spark job (~5 s of fixed
-            # scheduling at 32 cores). Produce the same on-disk state
-            # directly; `_read_bucketed` already serves schema-only
-            # tables from the sidecar.
-            self.fs.delete(self.path)
-            self.fs.mkdirs(self.path)
-            self.fs.write_text_atomic(
-                self._schema_file, json.dumps(snapshot.schema.jsonValue())
-            )
-            # Both init paths rewrite the table dir, so both must re-land
-            # the bucket-count sidecar: a re-init after rebucket() that
-            # dropped it would let a later reader fall back to its
-            # constructor's n_buckets guess and prune/write buckets under
-            # the wrong modulus (silent key loss).
-            self._write_meta(self.path, self.n_buckets)
-            return
-        bucketed = bucket_of(snapshot, self.key_cols, self.n_buckets)
+            # write of zero rows costs a full Spark job (~5 s of fixed
+            # scheduling at 32 cores) to produce no bucket at all.
+            return {f"{_BUCKET}{b}": None for b in self._buckets(m)}, meta
         # Align tasks with buckets: each task then writes exactly one
         # bucket file instead of every task writing a sliver of every
         # bucket (n_tasks × n_buckets small files).
-        bucketed.repartition(self.n_buckets, F.col("_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(self.path)
-        self.fs.write_text_atomic(
-            self._schema_file, json.dumps(snapshot.schema.jsonValue())
-        )
-        self._write_meta(self.path, self.n_buckets)
+        bucketed = bucket_of(snapshot, self.key_cols, n).repartition(n, F.col("_bucket"))
+        return self._write(m, bucketed, self._buckets(m)), meta
 
     #: Lossless numeric widenings Debezium emits on source type changes
     #: (e.g. INT column altered to BIGINT). Anything else (narrowing,
@@ -312,7 +257,7 @@ class ParquetStateTable:
         """Schema evolution: add nullable columns and widen existing
         numeric columns (int→long, float→double, …).
 
-        Existing bucket files stay untouched — reads apply the sidecar
+        Existing bucket files stay untouched — reads apply the stored
         schema (missing columns read as NULL, narrower on-disk numerics
         upcast); newly merged buckets are written with the widened
         schema. Covers both evolutions Debezium produces routinely: the
@@ -320,10 +265,8 @@ class ParquetStateTable:
         widened (the dynamic-schema capability the reference left as a
         TODO, README.md:51). Non-widening type changes raise.
         """
-        schema = self._stored_schema()
-        if schema is None:
-            raise FileNotFoundError(f"state table {self.path} not initialized")
-        fields = list(schema.fields)
+        m = self._manifest()
+        fields = list(self._schema(m).fields)
         by_name = {f.name: i for i, f in enumerate(fields)}
         for name, dtype in new_columns.items():
             new_dt = T._parse_datatype_string(dtype)
@@ -341,128 +284,56 @@ class ParquetStateTable:
                     "lossless widening; rebuild the table instead"
                 )
             fields[by_name[name]] = T.StructField(name, new_dt)
-        self.fs.write_text_atomic(
-            self._schema_file, json.dumps(T.StructType(fields).jsonValue())
-        )
-
-    def _align_to_schema(self, df: DataFrame) -> DataFrame:
-        """Project df onto the stored schema: NULL-fill columns the
-        on-disk files don't have yet, and upcast columns written before
-        a type widening (post-evolve reads)."""
-        schema = self._stored_schema()
-        if schema is None:
-            return df
-        on_disk = {f.name: f.dataType for f in df.schema.fields}
-        cols = []
-        for f in schema.fields:
-            if f.name not in on_disk:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            elif on_disk[f.name] != f.dataType:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.col(f.name))
-        if "_bucket" in df.columns:
-            cols.append(F.col("_bucket"))
-        return df.select(*cols)
-
-    def compact_buckets(self, min_files: int = 4) -> int:
-        """Maintenance: rewrite buckets fragmented into many small files
-        (each merge leaves one file per touched bucket, but crash-
-        recovered or externally-appended buckets can fragment). Returns
-        the number of buckets compacted. The 100 TB version runs this
-        on a schedule against per-bucket file counts from the lake
-        listing — same logic, same swap protocol as merge()."""
-        if not self.exists():
-            return 0
-        fragmented = []
-        for d in self.fs.listdir(self.path):
-            if d.startswith("_bucket="):
-                files = [
-                    f
-                    for f in self.fs.listdir(os.path.join(self.path, d))
-                    if f.endswith(".parquet")
-                ]
-                if len(files) >= min_files:
-                    fragmented.append(int(d.split("=", 1)[1]))
-        if not fragmented:
-            return 0
-        sub = self._read_bucketed().filter(F.col("_bucket").isin(fragmented))
-        sub = sub.repartition(len(fragmented), F.col("_bucket"))
-        # Deterministic sibling scratch dir (single-writer discipline):
-        # a crash leaves it behind, and the delete-first on the next run
-        # sweeps it — same lifecycle a mkdtemp leak would have needed.
-        tmp = self.path + "_compact_tmp"
-        self.fs.delete(tmp)
-        try:
-            sub.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-            for b in fragmented:
-                src = os.path.join(tmp, f"_bucket={b}")
-                dst = os.path.join(self.path, f"_bucket={b}")
-                if self.fs.exists(src):
-                    self.fs.delete(dst)
-                    self.fs.rename(src, dst)
-        finally:
-            self.fs.delete(tmp)
-        return len(fragmented)
+        m.commit({}, schema=T.StructType(fields).jsonValue())
 
     def lookup(self, keys: DataFrame) -> DataFrame:
         """Point-lookup: the state rows whose key appears in ``keys``
         (a DataFrame carrying the key columns). Reads ONLY the buckets
-        the requested keys hash into — the same partition pruning the
+        the requested keys hash into, by path — the same pruning the
         merge path uses — so the cost is O(touched buckets), not
         O(state). The serving-path counterpart of ``merge``: 'give me
         these customers' current rows' without a full table scan."""
-        keyed = bucket_of(
-            keys.select(*self.key_cols).distinct(), self.key_cols, self.n_buckets
-        )
-        touched = [r._bucket for r in keyed.select("_bucket").distinct().collect()]
-        if not touched:
-            return self.read().limit(0)
-        state = self._read_bucketed().filter(F.col("_bucket").isin(touched))
-        return state.drop("_bucket").join(
-            F.broadcast(keys.select(*self.key_cols).distinct()),
-            self.key_cols,
-            "left_semi",
-        )
+        m = self._manifest()
+        keys = keys.select(*self.key_cols).distinct()
+        keyed = bucket_of(keys, self.key_cols, self._n(m))
+        touched = {r._bucket for r in keyed.select("_bucket").distinct().collect()}
+        return self._read(m, touched).join(F.broadcast(keys), self.key_cols, "left_semi")
 
     def merge(self, changes: DataFrame, data_cols: Sequence[str] | None = None) -> None:
-        """Merge a compacted change batch, rewriting only touched buckets."""
-        changes = bucket_of(changes, self.key_cols, self.n_buckets).cache()
+        """Merge a compacted change batch, rewriting only touched buckets.
+
+        The touched buckets are rewritten into one new directory and a
+        single manifest publishes them, so the merge is atomic: a crash
+        before the publish leaves the table exactly as it was, and
+        replaying the batch (last-write-wins) yields the same table. A
+        bucket every key of which was deleted is simply dropped from the
+        manifest."""
+        m = self._manifest()
+        updates = self._merge_updates(m, changes, data_cols)
+        if updates:
+            m.commit(updates)
+
+    def _merge_updates(
+        self, m: Manifest, changes: DataFrame, data_cols: Sequence[str] | None
+    ) -> dict:
+        n = self._n(m)
+        changes = bucket_of(changes, self.key_cols, n).cache()
         try:
             touched = [r._bucket for r in changes.select("_bucket").distinct().collect()]
             if not touched:
-                return
-            # Partition pruning: only touched buckets are scanned.
-            state = self._read_bucketed().filter(F.col("_bucket").isin(touched))
+                return {}
             # No forced broadcast: small CDC batches get broadcast by AQE
             # anyway; forcing it makes BIG batches (backfills) build a
             # driver-side broadcast relation of the whole change set.
             merged = apply_changes(
-                state.drop("_bucket"),
+                self._read(m, set(touched)),
                 changes.drop("_bucket"),
                 self.key_cols,
                 data_cols=data_cols,
             )
-            merged = bucket_of(merged, self.key_cols, self.n_buckets).repartition(
-                max(len(touched), 1), F.col("_bucket")
+            merged = bucket_of(merged, self.key_cols, n).repartition(
+                len(touched), F.col("_bucket")
             )
-            # Write to a scratch dir first, then swap touched bucket dirs
-            # in; dynamic partition overwrite would do this natively on a
-            # real cluster (spark.sql.sources.partitionOverwriteMode=
-            # dynamic) — the explicit swap keeps the "delete bucket that
-            # emptied out" case (every key in a bucket tombstoned) exact.
-            tmp = self.path + "_merge_tmp"
-            self.fs.delete(tmp)
-            try:
-                merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-                for b in touched:
-                    src = os.path.join(tmp, f"_bucket={b}")
-                    dst = os.path.join(self.path, f"_bucket={b}")
-                    if self.fs.exists(dst):
-                        self.fs.delete(dst)
-                    if self.fs.exists(src):
-                        self.fs.rename(src, dst)
-            finally:
-                self.fs.delete(tmp)
+            return self._write(m, merged, touched)
         finally:
             changes.unpersist()

@@ -286,7 +286,6 @@ def run_cdc_stream(
     checkpoint_dir: str,
     available_now: bool = True,
     compact_every_n_batches: int | None = None,
-    compact_min_files: int = 4,
     neardup_store=None,
     neardup_text_col: str | None = None,
     neardup_threshold: float = 0.5,
@@ -300,26 +299,30 @@ def run_cdc_stream(
     False for a continuously running query (default micro-batch
     trigger, as the reference uses).
 
-    ``compact_every_n_batches`` opts into periodic small-file
-    maintenance: every N micro-batches, buckets fragmented into
-    ``compact_min_files``+ parquet files are rewritten via
-    ``state.compact_buckets`` — a long-running CDC stream otherwise
-    accumulates fragments from crash-recovered or externally-appended
-    buckets, and small files are the classic lake-scale read killer.
-    Runs inside foreachBatch, so it is serialized with merges (no
-    concurrent writer) and its cost amortizes over N batches.
+    Each micro-batch's merge rewrites its touched buckets into new
+    directories and publishes them in one manifest commit
+    (``ParquetStateTable.merge``), so a batch's output is atomic: a
+    crash mid-batch leaves the state before the batch, and the restart
+    replays the batch from the checkpoint onto it. Replaying a batch
+    that did commit writes the same rows (last-write-wins), which is
+    the idempotent-sink half of Structured Streaming's exactly-once
+    contract. A merge writes one file per touched bucket, so the state
+    never fragments.
 
     ``neardup_store`` (a ``streaming.neardup.SignatureStore``) +
     ``neardup_text_col`` opt the stream into ingest-time near-dup
     suppression: each batch's upserts are LSH-probed against the
     accepted corpus and in-batch candidates, duplicates dropped before
-    the merge (see :func:`batch_apply_with_neardup`). Store compaction
-    piggybacks on the same ``compact_every_n_batches`` cadence.
+    the merge (see :func:`batch_apply_with_neardup`). Each batch's
+    append adds small files to the signature store;
+    ``compact_every_n_batches`` rewrites them every N micro-batches
+    (``SignatureStore.compact``), inside foreachBatch, so it is
+    serialized with merges and its cost amortizes over N batches.
 
     ``drift_policy`` ('evolve' | 'strict') opts into per-batch schema
     drift handling against the IN-BAND Connect schema (cdc/drift.py):
     'evolve' auto-adds nullable columns / widens numerics in both the
-    parse spec and the state table's sidecar schema before merging;
+    parse spec and the state table's stored schema before merging;
     destructive drift (dropped/retyped columns) raises and fails the
     batch VISIBLY instead of silently dropping data. The evolved spec
     carries across micro-batches within this stream.
@@ -371,12 +374,11 @@ def run_cdc_stream(
         else:
             batch_apply(projected, spec, state)
         if (
-            compact_every_n_batches
+            neardup_store is not None
+            and compact_every_n_batches
             and (batch_id + 1) % compact_every_n_batches == 0
         ):
-            state.compact_buckets(min_files=compact_min_files)
-            if neardup_store is not None:
-                neardup_store.compact()
+            neardup_store.compact()
 
     writer = (
         raw_stream.writeStream.foreachBatch(_fn)

@@ -1,21 +1,32 @@
 """Time travel for the CDC state table: reconstruct the keyed state as
 of any past batch from an append-only change log.
 
-Delta gets this from its transaction log; on plain parquet we keep:
+Delta gets this from its transaction log; on plain parquet one manifest
+store at the table's path (``storage/manifest.py``) names
 
-- ``snapshot0/``  — the initial state (written once at init)
-- ``log/``        — every compacted change batch, appended with its
-                    ``_batch_seq`` (partition column → pruned reads)
+- ``snapshot`` — the state as of the base sequence (the initial state,
+  advanced by each ``compact_log`` retention tick);
+- ``log/<seq>`` — every compacted change batch, one directory per
+  batch, each row carrying its ``_batch_seq``;
+- the current state's bucket directories (``self.current``, a
+  :class:`ParquetStateTable` on the same store);
 
-``as_of(seq)`` = LWW-compact the log restricted to ``_batch_seq <= seq``
-and apply it to snapshot0 — one window + one merge join, O(log size up
-to seq), no stored per-version copies. The audit/"what did the
-dashboard say on Tuesday" capability CDC pipelines are asked for.
+and holds the sequence counter, the base sequence and the merged
+``data_cols`` as metadata. ``merge_logged`` publishes the logged batch,
+the current state's rewritten buckets and the new sequence in ONE
+manifest, as do ``init``, ``compact_log`` and ``purge_keys``: a crash
+leaves every face of the table at the old version or the new one.
+
+``as_of(seq)`` = LWW-compact the log entries ``base < s <= seq`` and
+apply them to the snapshot — one window + one merge join, O(log size up
+to seq), no stored per-version copies. (Retained manifests cannot serve
+it instead: a micro-batch touching every bucket would make each retained
+version a whole copy of the state.) The audit/"what did the dashboard
+say on Tuesday" capability CDC pipelines are asked for.
 """
 
 from __future__ import annotations
 
-import os  # os.path.join only — file ops go through StateFS
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,11 +38,9 @@ from spark_streaming_with_debezium_spark.cdc.merge import (
     apply_changes,
 )
 from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
-# Durable marker/pointer writes go through StateFS.write_text_atomic:
-# a torn ``_base_seq``/``.pending`` that parses as 0 would silently
-# mis-recover (serve pre-retention state); atomic-publish visibility
-# makes each file either absent or complete on every backend.
+_SNAPSHOT, _LOG = "snapshot", "log/"
 
 
 class TimeTravelStateTable:
@@ -49,170 +58,78 @@ class TimeTravelStateTable:
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
         self.key_cols = list(key_cols)
-        self.current = ParquetStateTable(
-            spark, os.path.join(path, "current"), key_cols, n_buckets,
-            fs=self.fs,
-        )
-        self._snap_dir = os.path.join(path, "snapshot0")
-        self._log_dir = os.path.join(path, "log")
-        self._data_cols_path = os.path.join(path, "_data_cols")
-        self._base_seq_path = os.path.join(path, "_base_seq")
-        # Finish or roll back any compact_log interrupted by a crash
-        # BEFORE reading the base — otherwise a half-applied fold
-        # (snapshot already advanced, base not yet persisted) would
-        # silently serve corrupted reconstructions.
-        self._recover_compaction()
-        # The snapshot represents state as of _base_seq (0 until a
-        # compact_log retention tick folds a log prefix into it).
-        self._base_seq = self._recover_base_seq()
-        # Reopening an existing table must resume the sequence from the
-        # durable log, not restart at 0 — a restarted counter would
-        # append new merges under already-used _batch_seq partitions,
-        # corrupting replay and every as_of reconstruction. After a
-        # retention tick the log may be EMPTY, so the floor is the
-        # folded base sequence, not 0.
-        self._seq = self._recover_seq()
-        self._data_cols = self._recover_data_cols()
+        self.current = ParquetStateTable(spark, path, key_cols, n_buckets, fs=self.fs)
 
-    def _recover_base_seq(self) -> int:
-        if not self.fs.exists(self._base_seq_path):
-            return 0
-        return int(self.fs.read_text(self._base_seq_path).strip() or 0)
+    def _manifest(self) -> Manifest:
+        return Manifest.open(self.fs, self.path)
 
-    def _drop_folded_partitions(self, upto_seq: int) -> int:
-        dropped = 0
-        for d in self.fs.listdir(self._log_dir):
-            if d.startswith("_batch_seq="):
-                if int(d.split("=", 1)[1]) <= upto_seq:
-                    self.fs.delete(os.path.join(self._log_dir, d))
-                    dropped += 1
-        return dropped
+    @property
+    def _seq(self) -> int:
+        """Sequence number of the last logged batch."""
+        return self._manifest().meta.get("seq", 0)
 
-    def _recover_compaction(self) -> None:
-        """Crash recovery for :meth:`compact_log`'s rename-only fold
-        protocol, keyed on WHICH DIRECTORIES EXIST (each is complete
-        by construction — directories only ever appear/disappear via
-        atomic rename, except the aside copy deleted strictly last):
+    @property
+    def _base_seq(self) -> int:
+        """Sequence the snapshot represents (0 until a retention tick)."""
+        return self._manifest().meta.get("base_seq", 0)
 
-        - marker + snap + tmp, no aside → crash before the swap began:
-          roll BACK (drop tmp + marker; nothing was destroyed).
-        - marker + aside + tmp, no snap → crash between the two swap
-          renames: roll FORWARD (land tmp as snap, persist base, drop
-          folded log, drop aside).
-        - marker + aside + snap        → crash after the swap (tmp is
-          gone): roll FORWARD (persist base, drop folded log, drop
-          aside — possibly re-deleting a half-removed aside, which is
-          safe because nothing reads it).
-        - marker + snap only           → crash after cleanup, before
-          the marker was removed: re-run the idempotent tail.
-        - tmp without marker           → stray from a crash before the
-          marker: roll back (remove tmp).
-        The marker and ``_base_seq`` are written via
-        ``StateFS.write_text_atomic``, so a torn/empty marker that
-        would parse as 0 cannot exist.
-        """
-        tmp = self._snap_dir + "_folding"
-        old = self._snap_dir + "_old"
-        pend = self._base_seq_path + ".pending"
-        has_tmp, has_pend = self.fs.isdir(tmp), self.fs.exists(pend)
-        has_snap, has_old = self.fs.isdir(self._snap_dir), self.fs.isdir(old)
-        if has_pend:
-            upto = int(self.fs.read_text(pend).strip() or 0)
-            if has_snap and has_tmp and not has_old:
-                self.fs.delete(tmp)
-                self.fs.delete(pend)
-            else:
-                if not has_snap and has_tmp:
-                    self.fs.rename(tmp, self._snap_dir)
-                self.fs.write_text_atomic(self._base_seq_path, str(upto))
-                self._drop_folded_partitions(upto)
-                self.fs.delete(old)
-                self.fs.delete(pend)
-        else:
-            if has_tmp:
-                self.fs.delete(tmp)
-            # an aside without a marker is unreachable by the protocol
-            # (aside appears after the marker, marker removed after the
-            # aside is gone) — but sweep it defensively
-            if has_old and has_snap:
-                self.fs.delete(old)
-
-    def _recover_seq(self) -> int:
-        seqs = [
-            int(d.split("=", 1)[1])
-            for d in self.fs.listdir(self._log_dir)
-            if d.startswith("_batch_seq=")
-        ]
-        return max(seqs, default=self._base_seq)
-
-    def _recover_data_cols(self) -> list[str] | None:
-        if not self.fs.exists(self._data_cols_path):
-            return None
-        cols = [
-            line.strip()
-            for line in self.fs.read_text(self._data_cols_path).splitlines()
-            if line.strip()
-        ]
-        return cols or None
+    @property
+    def _data_cols(self) -> list[str] | None:
+        return self._manifest().meta.get("data_cols")
 
     def init(self, snapshot: DataFrame) -> None:
-        snapshot.write.mode("overwrite").parquet(self._snap_dir)
-        self.current.init(self.spark.read.parquet(self._snap_dir))
-        # Re-init on an existing path must purge the old change log:
-        # stale _batch_seq=N partitions would otherwise receive the next
-        # merge's append (log writes are mode=append) and replay/as_of
-        # would read old+new rows as one corrupted batch.
-        self.fs.delete(self._log_dir)
-        self._seq = 0
-        self._base_seq = 0
-        self._data_cols = None
-        self.fs.delete(self._data_cols_path)
-        self.fs.delete(self._base_seq_path)
+        """Bootstrap (or re-bootstrap) from a snapshot. A re-init also
+        drops the old change log: replay/as_of must never mix batches of
+        two histories."""
+        m = self._manifest()
+        snap = m.new_dir("snapshot")
+        snapshot.write.mode("overwrite").parquet(snap)
+        updates, meta = self.current._init_updates(m, self.spark.read.parquet(snap))
+        updates.update({_LOG + s: None for s in m.named(_LOG)})
+        updates[_SNAPSHOT] = snap
+        m.commit(updates, **meta, seq=0, base_seq=0, data_cols=None)
 
     def merge_logged(
         self, changes: DataFrame, data_cols: Sequence[str] | None = None
     ) -> int:
         """Merge into current state AND append the (compacted) batch to
-        the log. Returns the batch sequence number."""
-        # Persist data_cols so as_of applies the SAME column subset as
-        # the maintained current state (a balance-only merge must stay
-        # balance-only when replayed historically). The guard is
-        # two-sided: as_of replays EVERY batch with one data_cols value,
-        # so mixing full-row merges (None) with subset merges in either
-        # order silently drops columns on replay — reject both.
+        the log, in one commit. Returns the batch sequence number."""
+        m = self._manifest()
+        seq, stored = m.meta.get("seq", 0), m.meta.get("data_cols")
+        # as_of applies the SAME column subset as the maintained current
+        # state (a balance-only merge must stay balance-only when
+        # replayed historically). The guard is two-sided: as_of replays
+        # EVERY batch with one data_cols value, so mixing full-row
+        # merges (None) with subset merges in either order silently
+        # drops columns on replay — reject both.
         if data_cols is None:
-            if self._data_cols is not None:
+            if stored is not None:
                 raise ValueError(
-                    f"full-row merge after subset merges ({self._data_cols}) "
+                    f"full-row merge after subset merges ({stored}) "
                     "— historical replay would diverge"
                 )
         else:
-            if self._data_cols is not None and list(data_cols) != self._data_cols:
+            if stored is not None and list(data_cols) != stored:
                 raise ValueError(
-                    f"data_cols changed across merges: {self._data_cols} "
+                    f"data_cols changed across merges: {stored} "
                     f"vs {list(data_cols)} — historical replay would diverge"
                 )
-            if self._data_cols is None and self._seq > 0:
+            if stored is None and seq > 0:
                 raise ValueError(
                     f"subset merge ({list(data_cols)}) after full-row merges "
                     "— historical replay would diverge"
                 )
-            self._data_cols = list(data_cols)
-            self.fs.write_text_atomic(
-                self._data_cols_path, "\n".join(self._data_cols)
-            )
-        self._seq += 1
-        logged = changes.withColumn("_batch_seq", F.lit(self._seq))
-        logged.write.mode("append").partitionBy("_batch_seq").parquet(self._log_dir)
-        # replay from what was durably logged (exactly-once even if the
-        # caller's DataFrame is non-deterministic)
-        replay = (
-            self.spark.read.parquet(self._log_dir)
-            .filter(F.col("_batch_seq") == self._seq)
-            .drop("_batch_seq")
-        )
-        self.current.merge(replay, data_cols=data_cols)
-        return self._seq
+            stored = list(data_cols)
+        seq += 1
+        log_dir = m.new_dir("log")
+        changes.withColumn("_batch_seq", F.lit(seq)).write.mode("overwrite").parquet(log_dir)
+        # replay from what was logged (exactly-once even if the caller's
+        # DataFrame is non-deterministic)
+        replay = self.spark.read.parquet(log_dir).drop("_batch_seq")
+        updates = self.current._merge_updates(m, replay, data_cols)
+        updates[f"{_LOG}{seq}"] = log_dir
+        m.commit(updates, seq=seq, data_cols=stored)
+        return seq
 
     def read(self) -> DataFrame:
         return self.current.read()
@@ -221,64 +138,43 @@ class TimeTravelStateTable:
         """State as of (and including) batch ``seq``; seq=base →
         snapshot. Raises for seq below the retention horizon — that
         history was folded away by :meth:`compact_log`."""
-        if seq < self._base_seq:
+        return self._as_of(self._manifest(), seq)
+
+    def _as_of(self, m: Manifest, seq: int) -> DataFrame:
+        base = m.meta.get("base_seq", 0)
+        if seq < base:
             raise ValueError(
                 f"as_of({seq}) is beyond the retention horizon: log "
-                f"batches <= {self._base_seq} were folded into the "
+                f"batches <= {base} were folded into the "
                 "snapshot by compact_log and can no longer be replayed"
             )
-        snapshot = self.spark.read.parquet(self._snap_dir)
-        if seq <= self._base_seq or not self.fs.exists(self._log_dir):
+        snapshot = self.spark.read.parquet(m.path(_SNAPSHOT))
+        logs = [d for s, d in sorted(m.named(_LOG).items()) if base < int(s) <= seq]
+        if not logs:
             return snapshot
-        log = self.spark.read.parquet(self._log_dir).filter(
-            (F.col("_batch_seq") > self._base_seq) & (F.col("_batch_seq") <= seq)
-        )
         latest = compact_latest(
-            log, self.key_cols, order_cols=["_batch_seq"]
+            self.spark.read.parquet(*logs), self.key_cols, order_cols=["_batch_seq"]
         ).drop("_batch_seq")
         return apply_changes(
-            snapshot, latest, self.key_cols, data_cols=self._data_cols
+            snapshot, latest, self.key_cols, data_cols=m.meta.get("data_cols")
         )
 
     def compact_log(self, upto_seq: int) -> int:
         """Retention: fold log batches ``<= upto_seq`` into the
-        snapshot and drop their partitions. After this, ``as_of(s)``
-        serves only ``s >= upto_seq`` — the standard lake trade of
-        history depth for bounded storage; at 100 TB this is an O(1
-        files-touched-per-partition) tick, the reconstruction itself
-        one window + one merge. Returns the number of log partitions
+        snapshot and drop their entries, in one commit. After this,
+        ``as_of(s)`` serves only ``s >= upto_seq`` — the standard lake
+        trade of history depth for bounded storage; the reconstruction
+        is one window + one merge. Returns the number of log batches
         dropped."""
-        upto_seq = min(upto_seq, self._seq)
-        if upto_seq <= self._base_seq:
+        m = self._manifest()
+        upto_seq = min(upto_seq, m.meta.get("seq", 0))
+        if upto_seq <= m.meta.get("base_seq", 0):
             return 0
-        folded = self.as_of(upto_seq)
-        tmp = self._snap_dir + "_folding"
-        old = self._snap_dir + "_old"
-        pend = self._base_seq_path + ".pending"
-        # Fold protocol (crash-safe; recovery in _recover_compaction).
-        # The swap is RENAME-ONLY: a snapshot directory is either the
-        # complete old one or the complete new one at every instant.
-        # (A rmtree-then-rename swap can crash mid-rmtree, leaving a
-        # half-deleted snapshot that recovery would then serve.)
-        # 1. materialize the folded snapshot into tmp (non-destructive)
-        folded.write.mode("overwrite").parquet(tmp)
-        # 2. durable write-ahead marker BEFORE any destructive step
-        self.fs.write_text_atomic(pend, str(upto_seq))
-        # 3. swap via two atomic renames: aside the old, land the new
-        self.fs.rename(self._snap_dir, old)
-        self.fs.rename(tmp, self._snap_dir)
-        # 4. persist the base, THEN drop the folded partitions —
-        # stale partitions <= base are invisible to as_of (its filter
-        # is _batch_seq > base), so a crash between these steps only
-        # leaves ignorable files, never a wrong reconstruction. The
-        # aside copy is deleted LAST: until then every crash state
-        # still holds at least one complete snapshot.
-        self._base_seq = upto_seq
-        self.fs.write_text_atomic(self._base_seq_path, str(upto_seq))
-        dropped = self._drop_folded_partitions(upto_seq)
-        self.fs.delete(old)
-        self.fs.delete(pend)
-        return dropped
+        snap = m.new_dir("snapshot")
+        self._as_of(m, upto_seq).write.mode("overwrite").parquet(snap)
+        folded = {_LOG + s: None for s in m.named(_LOG) if int(s) <= upto_seq}
+        m.commit({_SNAPSHOT: snap, **folded}, base_seq=upto_seq)
+        return len(folded)
 
 
 def reduce_and(conds):
@@ -347,68 +243,47 @@ def changes_between(
 def purge_keys(table: TimeTravelStateTable, keys: DataFrame) -> dict[str, int]:
     """Right-to-be-forgotten: scrub every row matching ``keys`` (on the
     table's key columns) from the CURRENT state, the base SNAPSHOT, and
-    every retained LOG partition — after this, no ``read()``, ``as_of``
+    every retained LOG batch — after this, no ``read()``, ``as_of``
     or ``changes_between`` at any version can reproduce the keys.
     Unlike a tombstone merge (which deletes forward but leaves history
     replayable), purge rewrites history itself — the GDPR/erasure
     semantics a lake table needs out-of-band of normal CDC flow.
 
     Keys are a broadcast anti-join side (erasure requests are small by
-    nature). Each directory is rewritten with the same RENAME-ONLY
-    swap discipline as ``compact_log`` (materialize aside → two atomic
-    renames → delete aside last), applied snapshot → log → current:
-    every crash state holds at least one complete copy of each
-    directory, and re-invoking purge with the same keys completes an
-    interrupted scrub (each step is idempotent — an anti join of
-    already-purged data is a no-op rewrite). Returns rows dropped per
-    store. At 100 TB: one bounded rewrite per store; the log rewrite
-    preserves ``_batch_seq`` partitioning so as_of pruning is intact."""
+    nature). The three rewrites land in new directories and one commit
+    publishes them all, so a crash leaves every store scrubbed or none;
+    re-invoking purge with the same keys is a no-op rewrite. Returns
+    rows dropped per store. At 100 TB: one bounded rewrite per store;
+    the log rewrite keeps one directory per batch so as_of still reads
+    only the batches it needs."""
     spark = table.spark
-    fs = table.fs
+    m = table._manifest()
     k = F.broadcast(keys.select(*table.key_cols).distinct())
-
-    def swap_in(dir_path: str, purged: DataFrame, part_col: str | None) -> None:
-        tmp, old = dir_path + "_purging", dir_path + "_purged_old"
-        fs.delete(tmp)
-        w = purged.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(tmp)
-        fs.rename(dir_path, old)
-        fs.rename(tmp, dir_path)
-        fs.delete(old)
-
     dropped: dict[str, int] = {}
-    # snapshot (plain parquet)
-    snap = spark.read.parquet(table._snap_dir)
-    keep = snap.join(k, table.key_cols, "left_anti")
-    dropped["snapshot"] = snap.count() - keep.count()
-    swap_in(table._snap_dir, keep, None)
-    # log (partitioned by _batch_seq) — may not exist yet
-    if fs.isdir(table._log_dir):
-        log = spark.read.parquet(table._log_dir)
-        keep = log.join(k, table.key_cols, "left_anti")
-        dropped["log"] = log.count() - keep.count()
-        swap_in(table._log_dir, keep, "_batch_seq")
-    else:
-        dropped["log"] = 0
-    # current state — rebuild the bucketed layout (bucket dirs + schema
-    # sidecar) in a SIDE directory and swap it in rename-only. Calling
-    # table.current.init(keep) in place would overwrite the directory
-    # that `keep` lazily reads (self-overwrite hazard), and a crash
-    # mid-overwrite would leave no complete copy of the current store —
-    # the aside discipline the snapshot/log rewrites already follow.
-    cur = table.current.read()
-    keep = cur.join(k, table.key_cols, "left_anti")
-    dropped["current"] = cur.count() - keep.count()
-    cur_dir = table.current.path
-    tmp, old = cur_dir + "_purging", cur_dir + "_purged_old"
-    fs.delete(tmp)
-    side = ParquetStateTable(
-        spark, tmp, table.key_cols, table.current.n_buckets, fs=fs
-    )
-    side.init(keep)  # reads cur_dir, writes tmp — disjoint paths
-    fs.rename(cur_dir, old)
-    fs.rename(tmp, cur_dir)
-    fs.delete(old)
+
+    def scrub(df: DataFrame, name: str) -> DataFrame:
+        keep = df.join(k, table.key_cols, "left_anti")
+        dropped[name] = df.count() - keep.count()
+        return keep
+
+    snap = m.new_dir("snapshot")
+    scrub(spark.read.parquet(m.path(_SNAPSHOT)), "snapshot").write.mode(
+        "overwrite"
+    ).parquet(snap)
+    updates: dict[str, str | None] = {_SNAPSHOT: snap}
+    logs = m.named(_LOG)
+    dropped["log"] = 0
+    if logs:
+        # one directory per batch: partition by a copy of _batch_seq so
+        # the files keep the column as_of orders by
+        kept = scrub(spark.read.parquet(*logs.values()), "log")
+        updates.update({_LOG + s: None for s in logs})
+        for s, d in m.write_partitioned(
+            kept.withColumn("_log", F.col("_batch_seq")), "log", "_log"
+        ).items():
+            updates[_LOG + s] = d
+    # rebuilt as by init(): new directories, so the rewrite may read
+    # the current state it replaces
+    cur, meta = table.current._init_updates(m, scrub(table.current._read(m), "current"))
+    m.commit({**updates, **cur}, **meta)
     return dropped

@@ -28,12 +28,12 @@ Semantics per micro-batch (:func:`apply_batch_transactional`):
    the normal per-table parse→compact→merge
    (:meth:`CdcRegistry.apply_batch`), incomplete ones stay buffered.
 
-Crash safety: the buffer is a versioned parquet store — a new version
-directory is fully written and fsynced BEFORE the ``CURRENT`` pointer
-is atomically renamed over (the `cdc/timetravel.py` discipline), and
-the merge itself is idempotent (LWW on key + offsets), so the
-crash-replay of a micro-batch re-applies the same complete
-transactions onto the same state harmlessly.
+Crash safety: the buffer is a manifest store (``storage/manifest.py``)
+— each write lands its three parquet directories and publishes them in
+one manifest — and every table merge commits atomically and is
+idempotent (LWW on key + offsets), so the crash-replay of a
+micro-batch re-applies the same complete transactions onto the same
+state harmlessly.
 
 Scale: the buffer holds only IN-FLIGHT transactions (steady-state: a
 few seconds of open transactions, not history); completeness is one
@@ -44,17 +44,12 @@ the bucketed merge path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.cdc.registry import CdcRegistry
-from spark_streaming_with_debezium_spark.storage.fs import (
-    LocalFS,
-    StateFS,
-    fs_for_path,
-)
+from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 _EVENTS_SCHEMA = (
     "topic string, key string, value string, partition int, offset long, "
@@ -64,91 +59,36 @@ _ENDS_SCHEMA = "txn_id string, event_count long"
 _APPLIED_SCHEMA = "txn_id string, applied_batch long"
 
 
-def _fsync_tree(root: str) -> None:
-    """fsync every file and directory under ``root`` so the version's
-    parquet data is durable BEFORE the CURRENT pointer references it —
-    Spark's local parquet writes are not fsynced, and a power loss
-    after the pointer rename must not leave CURRENT pointing at
-    incompletely-durable data. Only meaningful (and only invoked) on
-    the local-POSIX backend; on a real lake (S3/HDFS) close() is the
-    durability barrier."""
-    for dirpath, _dirnames, filenames in os.walk(root):
-        for name in filenames:
-            fd = os.open(os.path.join(dirpath, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        dfd = os.open(dirpath, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
-
 class TxnBuffer:
-    """Versioned pending store: ``v{n}/events`` + ``v{n}/ends`` parquet
-    under a root, with a durable ``CURRENT`` pointer. Old versions are
-    deleted only after the pointer moves, so every crash state holds
-    one complete buffer."""
+    """Pending store: buffered ``events``, END markers (``ends``) and
+    the ``applied`` ledger, one parquet directory each, named by one
+    manifest at ``path``. ``write`` publishes all three at once, so
+    every crash state holds one complete buffer."""
+
+    _PARTS = {"events": _EVENTS_SCHEMA, "ends": _ENDS_SCHEMA, "applied": _APPLIED_SCHEMA}
 
     def __init__(self, spark: SparkSession, path: str, fs: StateFS | None = None):
         self.spark = spark
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
-        self.fs.mkdirs(path)
-        self._gc()
-
-    def _current(self) -> int | None:
-        ptr = os.path.join(self.path, "CURRENT")
-        if not self.fs.exists(ptr):
-            return None
-        txt = self.fs.read_text(ptr).strip()
-        return int(txt) if txt else None
-
-    def _gc(self) -> None:
-        """Drop version dirs the pointer no longer references (either
-        superseded, or half-written by a crash before the pointer
-        moved)."""
-        cur = self._current()
-        for d in self.fs.listdir(self.path):
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) != cur:
-                self.fs.delete(os.path.join(self.path, d))
 
     def read(self) -> tuple[DataFrame, DataFrame, DataFrame]:
-        cur = self._current()
-        if cur is None:
-            return (
-                self.spark.createDataFrame([], _EVENTS_SCHEMA),
-                self.spark.createDataFrame([], _ENDS_SCHEMA),
-                self.spark.createDataFrame([], _APPLIED_SCHEMA),
-            )
-        base = os.path.join(self.path, f"v{cur}")
-        return (
-            self.spark.read.schema(_EVENTS_SCHEMA).parquet(
-                os.path.join(base, "events")
-            ),
-            self.spark.read.schema(_ENDS_SCHEMA).parquet(
-                os.path.join(base, "ends")
-            ),
-            self.spark.read.schema(_APPLIED_SCHEMA).parquet(
-                os.path.join(base, "applied")
-            ),
+        m = Manifest.open(self.fs, self.path)
+        return tuple(
+            self.spark.read.schema(schema).parquet(m.path(name))
+            if name in m.entries
+            else self.spark.createDataFrame([], schema)
+            for name, schema in self._PARTS.items()
         )
 
     def write(
         self, events: DataFrame, ends: DataFrame, applied: DataFrame
     ) -> None:
-        cur = self._current()
-        nxt = 0 if cur is None else cur + 1
-        base = os.path.join(self.path, f"v{nxt}")
-        events.write.mode("overwrite").parquet(os.path.join(base, "events"))
-        ends.write.mode("overwrite").parquet(os.path.join(base, "ends"))
-        applied.write.mode("overwrite").parquet(os.path.join(base, "applied"))
-        if isinstance(self.fs, LocalFS):
-            _fsync_tree(base)  # data durable BEFORE the pointer moves
-        self.fs.write_text_atomic(os.path.join(self.path, "CURRENT"), str(nxt))
-        self._gc()
+        m = Manifest.open(self.fs, self.path)
+        dirs = {name: m.new_dir(name) for name in self._PARTS}
+        for name, df in zip(self._PARTS, (events, ends, applied)):
+            df.write.mode("overwrite").parquet(dirs[name])
+        m.commit(dirs)
 
 
 def split_transactional(

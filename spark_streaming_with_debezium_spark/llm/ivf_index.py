@@ -18,14 +18,21 @@ READING ONLY (vec_id, pq_code, nrm) — M small ints + one double per
 row instead of the d-double embedding, the column-pruning that turns
 a 100 TB probe scan into a ~1 TB one — and exact-reranks only the
 top-``refine`` survivors per query.
+
+Storage: one manifest store at the index path (``storage/manifest.py``)
+names the centroid and codebook directories, one directory per cell
+(``cells-v<N>/_cell=<c>``; the rows keep their ``cell`` column) and the
+buckets of the vec_id → cell sidecar, a :class:`ParquetStateTable` on
+the same store. ``build`` and ``upsert`` each publish everything they
+rewrote in one commit, so the cells and the sidecar never disagree and
+a crash leaves the index as it was.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_streaming_with_debezium_spark.llm.similarity import (
     IVF_K,
@@ -35,7 +42,9 @@ from spark_streaming_with_debezium_spark.llm.similarity import (
     norm,
     train_centroids,
 )
+from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
 from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 
 #: residual-PQ defaults: 64 dims → 8 subspaces × 32 codes ⇒ 8 small ints
@@ -44,34 +53,63 @@ PQ_M = 8
 PQ_KSUB = 32
 PQ_TRAIN_ITERS = 5
 
+# manifest entries: centroids, PQ codebooks, cell/<c> → that cell's rows
+_CENTROIDS, _BOOKS, _CELL = "centroids", "pq_books", "cell/"
+
 
 class IvfIndex:
     def __init__(self, spark: SparkSession, path: str, fs: StateFS | None = None):
         self.spark = spark
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
-        self._data_dir = os.path.join(path, "cells")
-        self._cent_dir = os.path.join(path, "centroids")
-        self._idmap_dir = os.path.join(path, "idmap")
-        self._books_dir = os.path.join(path, "pq_books")
 
-    def _idmap(self):
+    def _manifest(self) -> Manifest:
+        return Manifest.open(self.fs, self.path)
+
+    def _idmap(self) -> ParquetStateTable:
         """vec_id → cell sidecar as a bucketed state table: upsert's
         supersede lookup reads only the id-hash buckets the batch
         touches instead of column-scanning the whole index. The same
         machinery as the CDC state table — one protocol, two uses."""
-        from spark_streaming_with_debezium_spark.cdc.merge import (
-            ParquetStateTable,
-        )
+        return ParquetStateTable(self.spark, self.path, ["vec_id"], n_buckets=64, fs=self.fs)
 
-        return ParquetStateTable(
-            self.spark, self._idmap_dir, ["vec_id"], n_buckets=64, fs=self.fs
-        )
+    def _centroids(self, m: Manifest) -> DataFrame:
+        return self.spark.read.parquet(m.path(_CENTROIDS))
+
+    def _read(self, m: Manifest, cells=None) -> DataFrame:
+        """Indexed rows of ``cells`` (all when None), read by path."""
+        schema = T.StructType.fromJson(m.meta["cells_schema"])
+        dirs = [
+            d for c, d in sorted(m.named(_CELL).items())
+            if cells is None or int(c) in cells
+        ]
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
+    def read(self, cells=None) -> DataFrame:
+        """The indexed rows (``vec_id, embedding, nrm, cell`` and, on a PQ
+        index, ``pq_code``) of ``cells``, or of every cell."""
+        return self._read(self._manifest(), cells)
+
+    def _write_cells(self, m: Manifest, rows: DataFrame, replaced) -> dict:
+        """Write ``rows`` one directory per cell; returns the entry
+        updates (written cells point at their new directory, cells in
+        ``replaced`` that came out empty are dropped)."""
+        updates: dict[str, str | None] = {f"{_CELL}{c}": None for c in replaced}
+        written = m.write_partitioned(rows.withColumn("_cell", F.col("cell")), "cells", "_cell")
+        for c, d in written.items():
+            updates[_CELL + c] = d
+        return updates
 
     def build(self, vectors: DataFrame, id_col: str = "vec_id",
               vec_col: str = "embedding", k: int = IVF_K,
               train_cap: int = IVF_TRAIN_CAP, pq_m: int = 0,
               pq_ksub: int = PQ_KSUB) -> None:
+        """(Re)build the whole index and publish it in one commit. A
+        rebuild WITHOUT PQ drops earlier codebooks, so the index layout
+        always matches the build configuration."""
+        m = self._manifest()
         v = vectors.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         ).withColumn("nrm", norm(F.col("embedding")))
@@ -79,36 +117,32 @@ class IvfIndex:
             self.spark, v, id_col="vec_id", vec_col="embedding",
             k=k, train_cap=train_cap,
         )
-        cents.write.mode("overwrite").parquet(self._cent_dir)
-        cents_r = self.spark.read.parquet(self._cent_dir)
+        updates: dict[str, str | None] = {_CENTROIDS: m.new_dir("centroids"), _BOOKS: None}
+        cents.write.mode("overwrite").parquet(updates[_CENTROIDS])
+        cents_r = self.spark.read.parquet(updates[_CENTROIDS])
         assigned = nearest_cells(v, cents_r, "embedding", "nrm", 1, "cell")
         if pq_m > 0:
-            self._train_books(assigned, cents_r, pq_m, pq_ksub, train_cap)
-            assigned = self._encode(assigned, cents_r)
-        elif self.fs.exists(self._books_dir):
-            # rebuilding WITHOUT PQ over a previously-PQ index: stale
-            # codebooks would make upsert() PQ-encode new batches while
-            # resident rows lack pq_code (AnalysisException) and
-            # search_pq() misreport the index as PQ-capable — the
-            # on-disk layout must always match the build configuration
-            self.fs.delete(self._books_dir)
-        (
-            assigned.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(self._data_dir)
+            updates[_BOOKS] = m.new_dir("pq_books")
+            self._train_books(assigned, cents_r, pq_m, pq_ksub, train_cap, updates[_BOOKS])
+            assigned = self._encode(assigned, cents_r, updates[_BOOKS])
+        cells = self._write_cells(
+            m, assigned.repartition(F.col("cell")), [int(c) for c in m.named(_CELL)]
         )
-        # id→cell sidecar (read back from the written cells so the map
-        # reflects exactly what landed on disk)
-        self._idmap().init(
-            self.spark.read.parquet(self._data_dir).select("vec_id", "cell")
+        # id→cell sidecar, read back from the written cells so the map
+        # reflects exactly what landed on disk
+        written = self.spark.read.schema(assigned.schema).parquet(
+            *[d for d in cells.values() if d is not None]
+        )
+        idmap, meta = self._idmap()._init_updates(m, written.select("vec_id", "cell"))
+        m.commit(
+            {**updates, **cells, **idmap}, **meta, cells_schema=assigned.schema.jsonValue()
         )
 
     # ---- residual product quantization (float twin of the oracled
     # ---- ann_ivf_pq_topk query; see module docstring) ----
 
-    def _load_books(self) -> list[list[list[float]]]:
-        rows = self.spark.read.parquet(self._books_dir).collect()
+    def _load_books(self, books_dir: str) -> list[list[list[float]]]:
+        rows = self.spark.read.parquet(books_dir).collect()
         m_max = max(r["m"] for r in rows) + 1
         books: list[list[list[float]]] = [[] for _ in range(m_max)]
         for r in sorted(rows, key=lambda r: (r["m"], r["code"])):
@@ -116,7 +150,7 @@ class IvfIndex:
         return books
 
     def _train_books(self, assigned: DataFrame, cents: DataFrame,
-                     m: int, ksub: int, train_cap: int) -> None:
+                     m: int, ksub: int, train_cap: int, out: str) -> None:
         """Train per-subspace codebooks on RESIDUALS (v − cell
         centroid) over a bounded hash-deterministic sample — the
         driver-side Lloyd loop every PQ trainer runs (cost independent
@@ -166,13 +200,13 @@ class IvfIndex:
         ]
         self.spark.createDataFrame(
             rows, "m INT, code INT, cv ARRAY<DOUBLE>"
-        ).write.mode("overwrite").parquet(self._books_dir)
+        ).write.mode("overwrite").parquet(out)
 
-    def _encode(self, assigned: DataFrame, cents: DataFrame) -> DataFrame:
+    def _encode(self, assigned: DataFrame, cents: DataFrame, books_dir: str) -> DataFrame:
         """Attach ``pq_code`` (M ints): residual against the row's cell
         centroid, per-subspace argmin against broadcast literal
         codebooks — one stateless projection, the corpus never moves."""
-        books = self._load_books()
+        books = self._load_books(books_dir)
         sub = len(books[0][0])
         resid = F.zip_with(
             "embedding", F.col("ce"), lambda x, c: x - c
@@ -223,17 +257,18 @@ class IvfIndex:
         and the top-``refine`` per query are exact-reranked with one
         broadcast join back to the index. Per-query LUTs are bounded
         driver work (M·ksub dots), the serving-node shape."""
-        if not self.fs.exists(self._books_dir):
+        mf = self._manifest()
+        if _BOOKS not in mf.entries:
             raise ValueError(
                 f"index at {self.path} was built without PQ "
                 "(build(pq_m=...) first)"
             )
-        books = self._load_books()
+        books = self._load_books(mf.path(_BOOKS))
         m, sub = len(books), len(books[0][0])
         q = queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")
         ).withColumn("qnrm", norm(F.col("qe")))
-        cents = self.spark.read.parquet(self._cent_dir)
+        cents = self._centroids(mf)
         probes = nearest_cells(q, cents, "qe", "qnrm", n_probe, "cell")
         probe_rows = probes.select("query_id", "qe", "qnrm", "cell").collect()
         ce = {
@@ -263,12 +298,8 @@ class IvfIndex:
                 c: sum(a * b for a, b in zip(qe, ce[c])) for c in ent["cells"]
             }
         all_cells = sorted({c for e in by_q.values() for c in e["cells"]})
-        # partition-pruned AND column-pruned: codes + norm, no embedding
-        data = (
-            self.spark.read.parquet(self._data_dir)
-            .filter(F.col("cell").isin(all_cells))
-            .select("vec_id", "cell", "pq_code", "nrm")
-        )
+        # probed cells only AND column-pruned: codes + norm, no embedding
+        data = self._read(mf, all_cells).select("vec_id", "cell", "pq_code", "nrm")
 
         def adc_for(qid: int):
             ent = by_q[qid]
@@ -318,9 +349,7 @@ class IvfIndex:
             .select("query_id", "vec_id")
         )
         # exact rerank: q·refine broadcast join back to the index
-        emb = self.spark.read.parquet(self._data_dir).filter(
-            F.col("cell").isin(all_cells)
-        ).select("vec_id", "embedding", "nrm")
+        emb = self._read(mf, all_cells).select("vec_id", "embedding", "nrm")
         scored = (
             emb.join(F.broadcast(survivors), "vec_id")
             .join(F.broadcast(q), "query_id")
@@ -348,13 +377,11 @@ class IvfIndex:
         q = queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")
         ).withColumn("qnrm", norm(F.col("qe")))
-        cents = self.spark.read.parquet(self._cent_dir)
-        probes = nearest_cells(q, cents, "qe", "qnrm", n_probe, "cell")
-        cells = [r.cell for r in probes.select("cell").distinct().collect()]
-        # partition-pruned read: only the probed cells' files are scanned
-        data = self.spark.read.parquet(self._data_dir).filter(
-            F.col("cell").isin(cells)
-        )
+        m = self._manifest()
+        probes = nearest_cells(q, self._centroids(m), "qe", "qnrm", n_probe, "cell")
+        cells = {r.cell for r in probes.select("cell").distinct().collect()}
+        # only the probed cells' directories are scanned
+        data = self._read(m, cells)
         # no distinct: one cell per vector, unique (query, cell) probes
         cands = data.join(F.broadcast(probes), "cell").filter(
             F.col("vec_id") != F.col("query_id")
@@ -378,29 +405,29 @@ class IvfIndex:
         the batch to the EXISTING centroids (no re-clustering), replace
         any resident row carrying the same ``vec_id`` — including rows
         living in a DIFFERENT cell because the embedding changed — and
-        land the batch with the same touched-partition swap as
-        ``ParquetStateTable.merge``. A batch id always wins over the
-        resident row (last-writer-wins), so re-delivery is idempotent
-        and a changed embedding never leaves a stale duplicate behind.
+        publish the rewritten cells and the sidecar's rewritten buckets in
+        one commit. A batch id always wins over the resident row
+        (last-writer-wins), so re-delivery is idempotent and a changed
+        embedding never leaves a stale duplicate behind.
 
         Cost: O(batch) assignment + an id-hash-bucket-pruned lookup of
         the id→cell sidecar (``ParquetStateTable.lookup`` — reads only
         the sidecar buckets the batch ids hash into, NOT the index) to
         locate superseded rows + a rewrite of only the touched cells.
-        Indexes built before the sidecar existed fall back to a
-        column-pruned (cell, vec_id) scan. Rebuild (`build`) when
-        `cell_balance` reports drift — the standard IVF re-train
-        policy, a measured signal instead of a guess."""
+        Rebuild (`build`) when `cell_balance` reports drift — the
+        standard IVF re-train policy, a measured signal instead of a
+        guess."""
+        m = self._manifest()
         v = vectors.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         ).withColumn("nrm", norm(F.col("embedding")))
-        cents = self.spark.read.parquet(self._cent_dir)
+        cents = self._centroids(m)
         assigned = nearest_cells(v, cents, "embedding", "nrm", 1, "cell")
-        if self.fs.exists(self._books_dir):
+        if _BOOKS in m.entries:
             # PQ index: encode the batch with the FROZEN codebooks
             # (residual quantizers retrain only on rebuild, like the
             # coarse centroids — cell_balance is the trigger for both)
-            assigned = self._encode(assigned, cents)
+            assigned = self._encode(assigned, cents, m.path(_BOOKS))
         assigned = assigned.cache()
         cols = ["vec_id", "embedding", "nrm", "cell"] + (
             ["pq_code"] if "pq_code" in assigned.columns else []
@@ -408,20 +435,9 @@ class IvfIndex:
         try:
             batch_ids = assigned.select("vec_id").distinct()
             idmap = self._idmap()
-            if idmap.exists():
-                # Partition-pruned: only id-hash buckets holding batch
-                # ids are read; O(batch), independent of index size.
-                stale_cells = idmap.lookup(batch_ids).select("cell")
-            else:
-                # Pre-sidecar layout: column-pruned projection of the
-                # whole index — ONLY (cell, vec_id) is read.
-                locations = self.spark.read.parquet(self._data_dir).select(
-                    "cell", "vec_id"
-                )
-                stale_cells = (
-                    locations.join(F.broadcast(batch_ids), "vec_id", "left_semi")
-                    .select("cell")
-                )
+            # only the id-hash buckets holding batch ids are read:
+            # O(batch), independent of index size
+            stale_cells = idmap.lookup(batch_ids).select("cell")
             touched = [
                 r.cell
                 for r in assigned.select("cell")
@@ -431,38 +447,18 @@ class IvfIndex:
             ]
             if not touched:
                 return
-            resident = self.spark.read.parquet(self._data_dir).filter(
-                F.col("cell").isin(touched)
-            )
-            kept = resident.join(F.broadcast(batch_ids), "vec_id", "left_anti")
+            kept = self._read(m, touched).join(F.broadcast(batch_ids), "vec_id", "left_anti")
             out = kept.select(*cols).unionByName(assigned.select(*cols))
-            # Touched-partition swap (scratch write + per-cell rename):
-            # handles the cell-emptied-out case (all resident rows
-            # superseded away, nothing new assigned) that a dynamic
-            # partition overwrite would silently leave stale.
-            tmp = self._data_dir + "_upsert_tmp"
-            self.fs.delete(tmp)
-            try:
-                out.repartition(len(touched), F.col("cell")).write.mode(
-                    "overwrite"
-                ).partitionBy("cell").parquet(tmp)
-                for c in touched:
-                    src = os.path.join(tmp, f"cell={c}")
-                    dst = os.path.join(self._data_dir, f"cell={c}")
-                    if self.fs.exists(dst):
-                        self.fs.delete(dst)
-                    if self.fs.exists(src):
-                        self.fs.rename(src, dst)
-            finally:
-                self.fs.delete(tmp)
-            if idmap.exists():
-                # Keep the sidecar in lockstep: batch ids map to their
-                # (possibly new) cells; LWW merge is replay-idempotent.
-                idmap.merge(
-                    assigned.select(
-                        "vec_id", "cell", F.lit(False).alias("deleted")
-                    )
-                )
+            # a cell whose resident rows all moved away, with nothing new
+            # assigned, comes out empty and is dropped
+            updates = self._write_cells(
+                m, out.repartition(len(touched), F.col("cell")), touched
+            )
+            # the sidecar: batch ids map to their (possibly new) cells
+            updates.update(idmap._merge_updates(
+                m, assigned.select("vec_id", "cell", F.lit(False).alias("deleted")), None
+            ))
+            m.commit(updates)
         finally:
             assigned.unpersist()
 
@@ -472,7 +468,7 @@ class IvfIndex:
         data concentrating in few cells degrades probe selectivity;
         rebuild when the ratio drifts well past its post-build value."""
         counts = (
-            self.spark.read.parquet(self._data_dir)
+            self.read()
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_vectors"))
         )

@@ -1439,8 +1439,9 @@ def timeseries_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation, as ``test_timeseries_prefilter_pair_equality``
     asserts."""
     ud = _user_day_series(spark, sf_dir)
-    spread, pack = _similarity_scale_flags(spark, sf_dir)
-    cand = _similarity_candidates(ud, min_days=20, spread=spread, pack_ids=pack)
+    cand = _similarity_candidates(
+        ud, min_days=20, spread=_similarity_scale_flags(spark, sf_dir)
+    )
     an, bn = F.col("a.n"), F.col("b.n")
     pairs = (
         cand.join(ud.alias("a"), F.col("user_a") == F.col("a.user_id"))
@@ -1475,33 +1476,18 @@ def timeseries_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _similarity_scale_flags(
-    spark: SparkSession, sf_dir: str
-) -> tuple[bool, bool]:
-    """(spread, pack_ids) guards for ``_similarity_candidates``, both
-    derived without running a job:
+def _similarity_scale_flags(spark: SparkSession, sf_dir: str) -> bool:
+    """The ``spread`` guard for ``_similarity_candidates``, derived
+    without running a job: rebalance the candidate-join probe side only
+    when the events scan is the local single-split shape
+    (:func:`~..sources.tables.scan_is_small`) — the regime where the
+    prefix side broadcasts and the repartition buys fan-out balance; on
+    multi-split production inputs the day-keyed shuffle join
+    re-partitions the probe side anyway and the exchange would be pure
+    cost."""
+    from spark_streaming_with_debezium_spark.sources.tables import scan_is_small
 
-    - ``spread``: rebalance the candidate-join probe side only when the
-      events scan is the local single-split shape
-      (:func:`~..sources.tables.scan_is_small`) — the regime where the
-      prefix side broadcasts and the repartition buys fan-out balance;
-      on multi-split production inputs the day-keyed shuffle join
-      re-partitions the probe side anyway and the exchange would be
-      pure cost.
-    - ``pack_ids``: pack candidate pairs into one long for the dedup
-      exchange only when parquet footer stats PROVE user ids fit
-      unsigned 31-bit (0 ≤ min, max < 2³¹); past that width the
-      two-long form is the only bijective key.
-    """
-    from spark_streaming_with_debezium_spark.sources.tables import (
-        scan_is_small,
-        table_column_minmax,
-    )
-
-    spread = scan_is_small(load_table(spark, sf_dir, "events"))
-    mn, mx = table_column_minmax(sf_dir, "events", "user_id")
-    pack = mn is not None and mx is not None and mn >= 0 and mx < (1 << 31)
-    return spread, pack
+    return scan_is_small(load_table(spark, sf_dir, "events"))
 
 
 def _user_day_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1544,8 +1530,9 @@ def timeseries_similarity_census(spark: SparkSession, sf_dir: str) -> dict:
     pairwise-overlap correlation, which is why the verify join is
     broadcast-only with one map-side-combined aggregate on top."""
     ud = _user_day_series(spark, sf_dir)
-    spread, pack = _similarity_scale_flags(spark, sf_dir)
-    cand = _similarity_candidates(ud, min_days=20, spread=spread, pack_ids=pack)
+    cand = _similarity_candidates(
+        ud, min_days=20, spread=_similarity_scale_flags(spark, sf_dir)
+    )
     n_cand = cand.count()
     verify_rows = (
         cand.join(ud.alias("a"), F.col("user_a") == F.col("a.user_id"))
@@ -1601,7 +1588,6 @@ def _similarity_candidates(
     min_days: int,
     max_bucket: int = _MAX_DAY_BUCKET,
     spread: bool = True,
-    pack_ids: bool = False,
 ) -> DataFrame:
     """Distinct (user_a, user_b) candidates that can have ≥ ``min_days``
     overlapping days, via exact prefix filtering plus a bucket guard.
@@ -1661,29 +1647,6 @@ def _similarity_candidates(
         (F.col("pa.day") == F.col("pb.day"))
         & (F.col("pa.user_id") < F.col("pb.user_id")),
     )
-    if pack_ids:
-        # Candidate dedup over ONE packed long instead of two: the
-        # distinct is the heaviest exchange of the similarity pipeline
-        # (every (pair, shared-prefix-day) row crosses it), and with
-        # ids proven < 2³¹ by parquet footer stats (caller's guard,
-        # table_column_minmax) `a·2³² | b` is bijective, so the packed
-        # distinct dedups exactly the same pair set with ~⅓ fewer
-        # shuffle bytes per row (16-byte vs 24-byte UnsafeRow) and a
-        # single-word hash/compare. Unpacked right after — downstream
-        # sees identical (user_a, user_b) longs.
-        return (
-            joined.select(
-                (
-                    F.shiftleft(F.col("pa.user_id"), 32)
-                    + F.col("pb.user_id")
-                ).alias("_pk")
-            )
-            .distinct()
-            .select(
-                F.shiftright("_pk", 32).alias("user_a"),
-                (F.col("_pk") % F.lit(1 << 32)).alias("user_b"),
-            )
-        )
     return joined.select(
         F.col("pa.user_id").alias("user_a"),
         F.col("pb.user_id").alias("user_b"),

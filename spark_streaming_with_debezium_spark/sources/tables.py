@@ -48,13 +48,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def table_column_minmax(sf_dir: str, name: str, col: str):
-    """(min, max) of a numeric column from parquet FOOTER statistics —
-    zero data scan (row-group min/max stats are exact for int64). The
-    scale-honest way to pick a batch split point or prove an id-width
-    bound: an `agg(min, max).collect()` would cost one extra full scan
-    of the table per query invocation. Returns (None, None) when stats
-    are absent (caller decides)."""
+def table_column_max(sf_dir: str, name: str, col: str):
+    """Max of a numeric column from parquet FOOTER statistics — zero
+    data scan (row-group max stats are exact for int64). The
+    scale-honest way to pick a batch split point: an
+    ``agg(max).collect()`` would cost one extra full scan of the table
+    per query invocation. Fails closed: returns None when the column is
+    missing or ANY row group lacks stats (a max over the rest could be
+    too small), and the caller falls back to the scan."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -65,30 +66,25 @@ def table_column_minmax(sf_dir: str, name: str, col: str):
         if os.path.isdir(path)
         else [path]
     )
-    mn = mx = None
+    mx = None
     for fp in files:
         meta = pq.ParquetFile(fp).metadata
         col_idx = next(
             (
                 i
                 for i in range(meta.num_columns)
-                if meta.row_group(0).column(i).path_in_schema == col
+                if meta.schema.column(i).path == col
             ),
             None,
         )
         if col_idx is None:
-            continue
+            return None
         for rg in range(meta.num_row_groups):
             st = meta.row_group(rg).column(col_idx).statistics
-            if st is not None and st.has_min_max:
-                mx = st.max if mx is None else max(mx, st.max)
-                mn = st.min if mn is None else min(mn, st.min)
-    return mn, mx
-
-
-def table_column_max(sf_dir: str, name: str, col: str):
-    """Max-only face of :func:`table_column_minmax`."""
-    return table_column_minmax(sf_dir, name, col)[1]
+            if st is None or not st.has_min_max:
+                return None
+            mx = st.max if mx is None else max(mx, st.max)
+    return mx
 
 
 #: Logical node names allowed in a frame the partition probe may touch:

@@ -1,12 +1,13 @@
 """Filesystem abstraction for the durable-state layer.
 
-The CDC state stores (`cdc/merge.py`, `cdc/timetravel.py`,
-`cdc/transactions.py`, `streaming/neardup.py`) implement
-park/land/drop and write-then-pointer commit protocols. Those
-protocols are storage-agnostic, but expressing them with
-``os.rename``/``os.listdir`` binds them to a POSIX mount — the
-reference's target store is HDFS (`StreamingJobExecutor.scala:18`),
-and a 100 TB deployment lands on HDFS or an object store, not ext4.
+Every durable store commits through one protocol,
+:class:`~spark_streaming_with_debezium_spark.storage.manifest.Manifest`:
+write new immutable data directories, publish the next manifest under a
+new name, delete what it no longer names. That protocol is
+storage-agnostic, but expressing it with ``os.listdir``/``os.replace``
+would bind it to a POSIX mount — the reference's target store is HDFS
+(`StreamingJobExecutor.scala:18`), and a 100 TB deployment lands on HDFS
+or an object store, not ext4.
 
 This module lifts the file operations behind :class:`StateFS` with two
 implementations:
@@ -23,22 +24,17 @@ implementations:
 :func:`fs_for_path` picks the backend by URI scheme, so a state table
 constructed on ``s3a://bucket/state/orders`` just works.
 
-Semantics notes (the protocol code is written against these):
+Semantics the manifest commit relies on:
 
-- ``rename`` is required to be atomic per-directory on HDFS and on
-  POSIX. On S3A, rename is a copy+delete (not atomic); the commit
-  protocols remain *correct* there because every swap parks the old
-  directory first and recovery rolls forward/back from which
-  directories exist — but the instantaneous-swap guarantee weakens to
-  eventual. For S3-first deployments, prefer the
-  ``partitionOverwriteMode=dynamic`` write path (see
-  ``ParquetStateTable.merge``'s docstring) or a table format with a
-  log (Delta/Iceberg) — the module keeps those call sites behind this
-  one seam.
+- ``write_text_atomic`` publishes a file that readers see absent or
+  complete, never torn. The manifest never overwrites a published file
+  (each version gets a new name), so the non-atomic replace of
+  ``HadoopFS.write_text_atomic`` (delete, then rename) is never on the
+  commit path; on S3A the create itself is an atomic PUT.
+- The commit renames no directory, so it needs no atomic directory
+  rename: it runs unchanged on object stores whose rename is a copy.
 - Hadoop ``rename(src, dst)`` fails when ``dst`` exists (POSIX
-  overwrites). The protocols always delete ``dst`` first when they
-  mean replace, so both backends behave identically; ``rename`` here
-  raises on failure rather than returning False.
+  overwrites); ``rename`` here raises on failure on both backends.
 """
 
 from __future__ import annotations

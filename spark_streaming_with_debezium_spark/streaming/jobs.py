@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
+
 _LOG = logging.getLogger(__name__)
 
 EVENTS_SCHEMA = T.StructType(
@@ -633,27 +636,23 @@ def streaming_heavy_hitters(
     )
 
 
-def _recover_swapped_state(state_dir: str) -> None:
-    """Crash recovery for the rename-based state swap used by
-    :func:`run_rolling_hll_stream` and :func:`run_cms_token_stream`. If ``state_dir`` is absent, restore the newest complete
-    copy: prefer ``_tmp`` (the just-written merge, complete iff its
-    parquet ``_SUCCESS`` marker exists) over ``_old`` (the pre-swap
-    state). Then clear any leftover side directories so the next swap
-    starts clean. Idempotent; called before every micro-batch merge."""
-    import os
-    import shutil
+_STATE = "state"  # manifest entry naming a sketch stream's state directory
 
-    tmp, old = state_dir + "_tmp", state_dir + "_old"
-    if not os.path.isdir(state_dir):
-        if os.path.isdir(tmp) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            os.rename(tmp, state_dir)
-        elif os.path.isdir(old):
-            os.rename(old, state_dir)
-    for side in (tmp, old):
-        if os.path.isdir(side):
-            shutil.rmtree(side)
+
+def sketch_state(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The committed state rows of :func:`run_rolling_hll_stream`
+    (``day, sk``) or :func:`run_cms_token_stream` (``i, bucket, c``),
+    read from the directory the state's manifest names."""
+    m = Manifest.open(fs_for_path(spark, state_dir), state_dir)
+    return spark.read.parquet(m.path(_STATE))
+
+
+def _commit_state(m: Manifest, state: DataFrame, **meta) -> None:
+    """Write a sketch stream's whole (tiny) state into a new directory
+    and publish it, with ``meta``, in one manifest commit."""
+    out = m.new_dir(_STATE)
+    state.write.mode("overwrite").parquet(out)
+    m.commit({_STATE: out}, **meta)
 
 
 def run_rolling_hll_stream(
@@ -669,59 +668,19 @@ def run_rolling_hll_stream(
     served from state alone (`sketch_hll_rolling_users` shape)
     without re-reading a single event.
 
-    Replay safety: the merge rewrites the full (tiny) state per batch
-    via write-into-temp + a rename-based swap (``state`` → ``_old``,
-    ``_tmp`` → ``state``, then drop ``_old``) so a crash at ANY point
-    leaves a complete state copy recoverable: ``_recover_swapped_state``
-    runs before every batch and prefers a fully-written ``_tmp``
-    (``_SUCCESS`` marker present) over ``_old`` when ``state`` is
-    absent. A replayed batch re-unions the same day sketches — HLL
-    union is IDEMPOTENT (set-semantics state machine), so duplicate
-    delivery cannot inflate estimates, which a counter-based state
-    table cannot claim.
+    Replay safety: each batch rewrites the full (tiny) state into a new
+    directory published by one manifest commit (``storage/manifest.py``),
+    so a crash at ANY point leaves the previous state or the new one. A
+    replayed batch re-unions the same day sketches — HLL union is
+    IDEMPOTENT (set-semantics state machine), so duplicate delivery
+    cannot inflate estimates, which a counter-based state table cannot
+    claim.
     """
-    import os
-    import shutil
-
-    from spark_streaming_with_debezium_spark.operators.sketches import (
-        LG_CONFIG_K,
-    )
-
-    spark = events.sparkSession
+    fs = fs_for_path(events.sparkSession, state_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return  # P3 empty-batch guard
-        _recover_swapped_state(state_dir)
-        daily = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
-            F.hll_sketch_agg("user_id", F.lit(LG_CONFIG_K)).alias("sk_new")
-        )
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            merged = (
-                state.join(daily, "day", "full_outer")
-                .select(
-                    "day",
-                    F.when(
-                        F.col("sk").isNotNull() & F.col("sk_new").isNotNull(),
-                        F.expr("hll_union(sk, sk_new)"),
-                    )
-                    .otherwise(F.coalesce("sk", "sk_new"))
-                    .alias("sk"),
-                )
-            )
-        else:
-            merged = daily.select("day", F.col("sk_new").alias("sk"))
-        tmp, old = state_dir + "_tmp", state_dir + "_old"
-        merged.write.mode("overwrite").parquet(tmp)
-        # Rename-based swap: a crash between any two steps leaves
-        # either state_dir intact, or a complete copy in _tmp/_old
-        # that _recover_hll_state restores on the next batch.
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        if batch_df.take(1):  # P3 empty-batch guard
+            _hll_fold(fs, state_dir, batch_df)
 
     q = (
         events.writeStream.outputMode("append")
@@ -733,11 +692,40 @@ def run_rolling_hll_stream(
     q.awaitTermination()
 
 
+def _hll_fold(fs: StateFS, state_dir: str, batch_df: DataFrame) -> None:
+    """One micro-batch of :func:`run_rolling_hll_stream`."""
+    from spark_streaming_with_debezium_spark.operators.sketches import (
+        LG_CONFIG_K,
+    )
+
+    m = Manifest.open(fs, state_dir)
+    daily = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
+        F.hll_sketch_agg("user_id", F.lit(LG_CONFIG_K)).alias("sk_new")
+    )
+    if _STATE in m.entries:
+        merged = (
+            batch_df.sparkSession.read.parquet(m.path(_STATE))
+            .join(daily, "day", "full_outer")
+            .select(
+                "day",
+                F.when(
+                    F.col("sk").isNotNull() & F.col("sk_new").isNotNull(),
+                    F.expr("hll_union(sk, sk_new)"),
+                )
+                .otherwise(F.coalesce("sk", "sk_new"))
+                .alias("sk"),
+            )
+        )
+    else:
+        merged = daily.select("day", F.col("sk_new").alias("sk"))
+    _commit_state(m, merged)
+
+
 def rolling_hll_estimates(spark: SparkSession, state_dir: str) -> DataFrame:
     """7-day rolling distinct estimates served PURELY from the sketch
     state table (no event access) — the query side of
     :func:`run_rolling_hll_stream`."""
-    daily = spark.read.parquet(state_dir)
+    daily = sketch_state(spark, state_dir)
     days = daily.select(F.col("day").alias("anchor"))
     in_window = (F.col("day") <= F.col("anchor")) & (
         F.col("day") >= F.date_sub(F.col("anchor"), 6)
@@ -786,10 +774,10 @@ def run_cms_token_stream(
     (a restart replays the uncommitted batch with the SAME id, so the
     fence makes add-merge transactional).
 
-    Atomicity: the fence column rides INSIDE the same parquet rows as
-    the counters and the whole directory commits via the rename-based
-    swap (shared :func:`_recover_swapped_state` crash recovery), so
-    counters and fence can never diverge.
+    Atomicity: the fence lives in the same manifest that names the
+    counters' directory, and each batch publishes both in one commit,
+    so counters and fence can never diverge — and the fence check reads
+    the manifest, not the state rows (no Spark job).
 
     ADVICE r9: the state also records the checkpoint's stable query id
     (``run_id``). Batch ids restart at 0 when a stream is pointed at
@@ -805,103 +793,24 @@ def run_cms_token_stream(
     document history kept. At 100 TB the per-batch sketch build is one
     explode + map-side-combined groupBy into ≤ d·w rows.
     """
+    import json
     import os
-    import shutil
 
-    from spark_streaming_with_debezium_spark.llm.dedup import _md5_60bit
-    from spark_streaming_with_debezium_spark.operators.sketches import (
-        _cms_hash_exprs,
-    )
-    from spark_streaming_with_debezium_spark.llm.corpus_rules import (
-        normalize_text,
-    )
-
-    spark = docs.sparkSession
+    fs = fs_for_path(docs.sparkSession, state_dir)
 
     def _checkpoint_query_id() -> str:
         """Stable per-checkpoint stream identity — Structured Streaming
         writes ``<checkpoint>/metadata`` ({"id": uuid}) once at stream
         start and reuses it on every restart of the same checkpoint."""
-        import json as _json
-
         try:
             with open(os.path.join(checkpoint_dir, "metadata")) as f:
-                return str(_json.load(f).get("id", ""))
+                return str(json.load(f).get("id", ""))
         except (OSError, ValueError):
             return ""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return  # P3 empty-batch guard
-        _recover_swapped_state(state_dir)
-        run_id = _checkpoint_query_id()
-        have_state = os.path.isdir(state_dir)
-        if have_state:
-            state = spark.read.parquet(state_dir)
-            last = state.agg(F.max("last_batch_id")).collect()[0][0]
-            if last is not None and batch_id <= last:
-                prev_run = (
-                    state.agg(F.max("run_id")).collect()[0][0]
-                    if "run_id" in state.columns
-                    else None
-                )
-                if prev_run and run_id and prev_run != run_id:
-                    _LOG.warning(
-                        "cms fence: batch %d <= committed %d but the "
-                        "stream identity changed (%s -> %s) — a fresh "
-                        "checkpoint was pointed at existing CMS state. "
-                        "Skipping keeps re-drains idempotent; if this "
-                        "stream carries NEW data the skip is data loss: "
-                        "reuse the original checkpoint or reset the "
-                        "state table.",
-                        batch_id, last, prev_run, run_id,
-                    )
-                else:
-                    _LOG.warning(
-                        "cms fence: skipping replayed batch %d "
-                        "(last committed %d)", batch_id, last,
-                    )
-                return  # fenced: this batch already committed
-        toks = batch_df.select(
-            F.explode(F.split(normalize_text("text"), " ")).alias("tok")
-        ).filter(F.col("tok") != "")
-        tok_counts = toks.groupBy("tok").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).withColumn("h", _md5_60bit(F.col("tok")))
-        delta = (
-            tok_counts.select(
-                "cnt",
-                F.posexplode(
-                    F.array(*_cms_hash_exprs(F.col("h")))
-                ).alias("i", "bucket"),
-            )
-            .groupBy("i", "bucket")
-            .agg(F.sum("cnt").alias("dc"))
-        )
-        if have_state:
-            merged = (
-                state.join(delta, ["i", "bucket"], "full_outer")
-                .select(
-                    "i",
-                    "bucket",
-                    (
-                        F.coalesce(F.col("c"), F.lit(0))
-                        + F.coalesce(F.col("dc"), F.lit(0))
-                    ).alias("c"),
-                )
-            )
-        else:
-            merged = delta.select("i", "bucket", F.col("dc").alias("c"))
-        out = merged.withColumn(
-            "last_batch_id", F.lit(int(batch_id)).cast("long")
-        ).withColumn("run_id", F.lit(run_id))
-        tmp, old = state_dir + "_tmp", state_dir + "_old"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        if batch_df.take(1):  # P3 empty-batch guard
+            _cms_fold(fs, state_dir, batch_df, batch_id, _checkpoint_query_id())
 
     q = (
         docs.writeStream.outputMode("append")
@@ -911,6 +820,74 @@ def run_cms_token_stream(
         .start()
     )
     q.awaitTermination()
+
+
+def _cms_fold(
+    fs: StateFS, state_dir: str, batch_df: DataFrame, batch_id: int, run_id: str
+) -> None:
+    """One micro-batch of :func:`run_cms_token_stream`, fenced on
+    ``batch_id``."""
+    from spark_streaming_with_debezium_spark.llm.corpus_rules import (
+        normalize_text,
+    )
+    from spark_streaming_with_debezium_spark.llm.dedup import _md5_60bit
+    from spark_streaming_with_debezium_spark.operators.sketches import (
+        _cms_hash_exprs,
+    )
+
+    m = Manifest.open(fs, state_dir)
+    last = m.meta.get("last_batch_id")
+    if last is not None and batch_id <= last:
+        prev_run = m.meta.get("run_id")
+        if prev_run and run_id and prev_run != run_id:
+            _LOG.warning(
+                "cms fence: batch %d <= committed %d but the "
+                "stream identity changed (%s -> %s) — a fresh "
+                "checkpoint was pointed at existing CMS state. "
+                "Skipping keeps re-drains idempotent; if this "
+                "stream carries NEW data the skip is data loss: "
+                "reuse the original checkpoint or reset the "
+                "state table.",
+                batch_id, last, prev_run, run_id,
+            )
+        else:
+            _LOG.warning(
+                "cms fence: skipping replayed batch %d "
+                "(last committed %d)", batch_id, last,
+            )
+        return  # fenced: this batch already committed
+    toks = batch_df.select(
+        F.explode(F.split(normalize_text("text"), " ")).alias("tok")
+    ).filter(F.col("tok") != "")
+    tok_counts = toks.groupBy("tok").agg(
+        F.count(F.lit(1)).alias("cnt")
+    ).withColumn("h", _md5_60bit(F.col("tok")))
+    delta = (
+        tok_counts.select(
+            "cnt",
+            F.posexplode(
+                F.array(*_cms_hash_exprs(F.col("h")))
+            ).alias("i", "bucket"),
+        )
+        .groupBy("i", "bucket")
+        .agg(F.sum("cnt").alias("dc"))
+    )
+    if _STATE in m.entries:
+        merged = (
+            batch_df.sparkSession.read.parquet(m.path(_STATE))
+            .join(delta, ["i", "bucket"], "full_outer")
+            .select(
+                "i",
+                "bucket",
+                (
+                    F.coalesce(F.col("c"), F.lit(0))
+                    + F.coalesce(F.col("dc"), F.lit(0))
+                ).alias("c"),
+            )
+        )
+    else:
+        merged = delta.select("i", "bucket", F.col("dc").alias("c"))
+    _commit_state(m, merged, last_batch_id=int(batch_id), run_id=run_id)
 
 
 def cms_token_estimates(
@@ -925,7 +902,7 @@ def cms_token_estimates(
         _cms_hash_exprs,
     )
 
-    state = spark.read.parquet(state_dir)
+    state = sketch_state(spark, state_dir)
     toks = spark.createDataFrame(
         [(t,) for t in tokens], "token string"
     ).withColumn("h", _md5_60bit(F.col("token")))

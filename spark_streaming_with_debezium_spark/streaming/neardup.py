@@ -12,11 +12,12 @@ foreachBatch upsert loop to similarity state):
 
 - The accepted-document state is a MinHash **signature store** on
   parquet, partitioned by ``_bdir = pmod(bucket, N_STORE_DIRS)`` of the
-  LSH band buckets. An incoming micro-batch computes its own banded
-  buckets, derives the touched ``_bdir`` values (a bounded collect —
-  at most N_STORE_DIRS ints), and reads ONLY those partitions: probe
-  cost scales with the batch, not the corpus — the same
-  partition-pruning discipline as ``ParquetStateTable.merge``.
+  LSH band buckets and committed through one manifest
+  (``storage/manifest.py``). An incoming micro-batch computes its own
+  banded buckets, derives the touched ``_bdir`` values (a bounded
+  collect — at most N_STORE_DIRS ints), and reads ONLY those
+  partitions' directories, by path: probe cost scales with the batch,
+  not the corpus — the same pruning as ``ParquetStateTable.merge``.
 - Candidate pairs = equi join on (band, bucket) between the batch's
   banded rows and the pruned store slice (plus the batch against
   itself via ``lsh_candidate_pairs``). Verification estimates Jaccard
@@ -34,11 +35,11 @@ with dynamic partition overwrite keyed by ``_ingest_batch`` so a
 replayed batch REPLACES its own output partition instead of appending
 duplicates.
 
-**File hygiene**: every append leaves small files under the touched
-``_bdir`` partitions; ``SignatureStore.compact`` rewrites fragmented
-partitions (same swap protocol as ``ParquetStateTable.compact_buckets``)
-and ``run_neardup_dedup_stream(compact_every_n_batches=N)`` schedules
-it inside foreachBatch, serialized with probes and appends.
+**File hygiene**: every append adds one small directory per touched
+``_bdir`` partition; ``SignatureStore.compact`` rewrites a fragmented
+partition's directories into one, in one commit, and
+``run_neardup_dedup_stream(compact_every_n_batches=N)`` schedules it
+inside foreachBatch, serialized with probes and appends.
 
 At 100 TB: the store holds bands×1 row per accepted doc of ~50 bytes;
 probes touch ≤ batch×bands buckets; the only unbounded growth is the
@@ -48,12 +49,12 @@ construction.
 
 from __future__ import annotations
 
-import os  # os.path.join only — file ops go through StateFS
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 from spark_streaming_with_debezium_spark.llm.dedup import (
     banded_rows,
@@ -62,116 +63,74 @@ from spark_streaming_with_debezium_spark.llm.dedup import (
 )
 
 N_STORE_DIRS = 64
+_BDIR = "bdir/"  # manifest entry prefix: bdir/<_bdir>/<version> → one append's rows
 
 
 class SignatureStore:
-    """Bucket-partitioned MinHash signature store for accepted docs."""
+    """Bucket-partitioned MinHash signature store for accepted docs.
+
+    Every append and compaction writes a new directory and publishes it
+    in one manifest commit, so a crash never leaves a partial append
+    or a half-compacted partition behind."""
 
     def __init__(self, spark: SparkSession, path: str, fs: StateFS | None = None):
         self.spark = spark
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
-        self._recover_compact()
 
-    def _aside_root(self) -> str:
-        # Aside dirs must live OUTSIDE self.path: Spark's partition
-        # discovery keeps any name containing '=', so an in-place
-        # '_bdir=7.aside' would be parsed as a (bogus) partition value.
-        return self.path + "_aside"
+    def _manifest(self) -> Manifest:
+        return Manifest.open(self.fs, self.path)
 
-    def _recover_compact(self) -> None:
-        """Crash-recovery sweep for :meth:`compact`'s rename-aside
-        swap. For each partition parked in the aside root: if the live
-        partition exists the swap completed → drop the aside copy; if
-        it does not, the crash hit between the two renames → rename
-        the aside copy back (roll back; the rewrite is redone by the
-        next compact). Also clears the orphaned ``_compact_tmp`` scratch
-        dir from a crashed rewrite."""
-        aside_root = self._aside_root()
-        if self.fs.isdir(aside_root):
-            for d in self.fs.listdir(aside_root):
-                if not d.startswith("_bdir="):
-                    continue
-                live = os.path.join(self.path, d)
-                parked = os.path.join(aside_root, d)
-                if self.fs.isdir(live):
-                    self.fs.delete(parked)
-                else:
-                    self.fs.rename(parked, live)
-            if not self.fs.listdir(aside_root):
-                self.fs.delete(aside_root)
-        self.fs.delete(self.path + "_compact_tmp")
+    def _parts(self, m: Manifest) -> dict[int, list[str]]:
+        """``_bdir`` → the entry names holding its rows."""
+        parts: dict[int, list[str]] = {}
+        for name in m.entries:
+            if name.startswith(_BDIR):
+                parts.setdefault(int(name.split("/")[1]), []).append(name)
+        return parts
 
-    def exists(self) -> bool:
-        return self.fs.isdir(self.path) and any(
-            d.startswith("_bdir=") for d in self.fs.listdir(self.path)
-        )
+    def _write(self, m: Manifest, banded: DataFrame, tag: str) -> dict[str, str]:
+        """Write ``banded`` partitioned by ``_bdir`` into a new
+        directory; returns the entries naming each written partition."""
+        partitioned = banded.withColumn(
+            "_bdir", F.pmod("bucket", F.lit(N_STORE_DIRS))
+        ).repartition(F.col("_bdir"))
+        return {
+            f"{_BDIR}{b}/{m.version + 1}": d
+            for b, d in m.write_partitioned(partitioned, tag, "_bdir").items()
+        }
+
+    def _read(self, m: Manifest, bdirs: list[int]) -> DataFrame | None:
+        parts = self._parts(m)
+        dirs = [m.path(n) for b in bdirs for n in parts.get(b, [])]
+        if not dirs:
+            return None
+        schema = T.StructType.fromJson(m.meta["schema"])
+        return self.spark.read.schema(schema).parquet(*dirs)
 
     def probe(self, touched_bdirs: list[int]) -> DataFrame | None:
         """Banded rows from ONLY the store partitions a batch can hit."""
-        if not self.exists() or not touched_bdirs:
-            return None
-        df = self.spark.read.parquet(self.path)
-        return df.filter(F.col("_bdir").isin(touched_bdirs))
+        return self._read(self._manifest(), touched_bdirs)
 
     def append(self, banded: DataFrame) -> None:
-        (
-            banded.withColumn("_bdir", F.pmod("bucket", F.lit(N_STORE_DIRS)))
-            .repartition(F.col("_bdir"))
-            .write.mode("append")
-            .partitionBy("_bdir")
-            .parquet(self.path)
-        )
+        m = self._manifest()
+        entries = self._write(m, banded, "append")
+        if entries:
+            m.commit(entries, schema=banded.schema.jsonValue())
 
     def compact(self, min_files: int = 8) -> int:
         """Rewrite ``_bdir`` partitions fragmented into ``min_files``+
-        parquet files (each batch append leaves one file per touched
-        partition). Same write-to-temp-then-swap protocol as
-        ``ParquetStateTable.compact_buckets``; call only from the
+        directories (each append adds one per touched partition) into
+        one directory each, published in one commit; call only from the
         single writer (foreachBatch). Returns partitions compacted."""
-        if not self.exists():
-            return 0
-        fragmented = []
-        for d in self.fs.listdir(self.path):
-            if d.startswith("_bdir="):
-                files = [
-                    f
-                    for f in self.fs.listdir(os.path.join(self.path, d))
-                    if f.endswith(".parquet")
-                ]
-                if len(files) >= min_files:
-                    fragmented.append(int(d.split("=", 1)[1]))
+        m = self._manifest()
+        parts = self._parts(m)
+        fragmented = sorted(b for b, names in parts.items() if len(names) >= min_files)
         if not fragmented:
             return 0
-        sub = self.spark.read.parquet(self.path).filter(
-            F.col("_bdir").isin(fragmented)
-        )
-        sub = sub.repartition(len(fragmented), F.col("_bdir"))
-        tmp = self.path + "_compact_tmp"
-        self.fs.delete(tmp)
-        aside_root = self._aside_root()
-        try:
-            sub.write.mode("overwrite").partitionBy("_bdir").parquet(tmp)
-            self.fs.mkdirs(aside_root)
-            for b in fragmented:
-                src = os.path.join(tmp, f"_bdir={b}")
-                dst = os.path.join(self.path, f"_bdir={b}")
-                parked = os.path.join(aside_root, f"_bdir={b}")
-                if self.fs.exists(src):
-                    # Rename-only swap (the old rmtree(dst)-then-move
-                    # could crash between the two and permanently lose
-                    # the partition's accepted-doc signatures, letting
-                    # previously accepted docs be re-admitted later):
-                    # park the old partition, land the new, delete the
-                    # parked copy last. _recover_compact rolls back or
-                    # completes from any crash point.
-                    self.fs.rename(dst, parked)
-                    self.fs.rename(src, dst)
-                    self.fs.delete(parked)
-            if self.fs.isdir(aside_root) and not self.fs.listdir(aside_root):
-                self.fs.delete(aside_root)
-        finally:
-            self.fs.delete(tmp)
+        entries: dict[str, str | None] = {n: None for b in fragmented for n in parts[b]}
+        entries.update(self._write(m, self._read(m, fragmented), "compact"))
+        m.commit(entries)
         return len(fragmented)
 
 

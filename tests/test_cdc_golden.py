@@ -106,6 +106,28 @@ def test_snapshot_load(spark, tmp_path):
     assert final[1] == ("Sally", "Thomas", "user1@example.com")
 
 
+def test_snapshot_load_either_converter_form(spark, tmp_path):
+    """Envelopes written with the JSON converter's schemas.enable=false
+    (no ``payload`` wrapper on key or value) load to the same state as
+    the wrapped form, and none of them is a dead letter."""
+    from spark_streaming_with_debezium_spark.cdc.envelope import dead_letters
+
+    def bare(event):
+        key, value, *rest = event
+        return (
+            json.dumps(json.loads(key)["payload"]),
+            json.dumps(json.loads(value)["payload"]),
+            *rest,
+        )
+
+    snapshot = SNAPSHOT + [envelope("r", 7, 2, "Ann", "Lee")]
+    wrapped = run_replay(spark, tmp_path / "wrapped", snapshot, [])
+    unwrapped = run_replay(spark, tmp_path / "bare", [bare(e) for e in snapshot], [])
+    assert unwrapped == wrapped and set(wrapped) == {1, 2, 7}
+    raw = spark.createDataFrame([bare(e) for e in snapshot], RAW_SCHEMA)
+    assert dead_letters(raw, CUSTOMERS).count() == 0
+
+
 def test_insert_update_delete_roundtrip(spark, tmp_path):
     # query1.sql: insert → update → delete across batches
     batches = [

@@ -3,10 +3,13 @@ exact baseline, simhash sanity, deterministic fake decode."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.registry import load_all
 from spark_streaming_with_debezium_spark.sources.tables import load_table
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 QUERIES = load_all()
 
@@ -377,11 +380,11 @@ def test_ivf_index_persistent_search(spark, sf_dir, tmp_path):
         for r in ivf_topk_rows(spark, sf_dir).collect()
     }
     assert got == inline
-    # pruning: the data read carries a partition filter on cell
-    df = spark.read.parquet(str(tmp_path / "ivf" / "cells")).filter(
-        F.col("cell").isin([1, 2])
-    )
-    assert "PartitionFilters: [" in plan_text(df, "simple") or "cell" in plan_text(df, "simple")
+    # pruning: a read of two cells scans only those cells' directories
+    df = idx.read([1, 2])
+    assert {r.cell for r in df.select("cell").distinct().collect()} <= {1, 2}
+    n_paths = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan_text(df, "simple"))
+    assert n_paths and int(n_paths.group(1)) <= 2
 
 
 def test_contamination_hot_gram_capped(spark, tmp_path):
@@ -608,9 +611,7 @@ def test_ivf_upsert_serves_new_vectors_without_rebuild(spark, sf_dir, tmp_path):
     """Incremental IVF: vectors appended via upsert must be findable by
     search (a query AT an upserted vector returns it as top hit),
     re-delivered ids must not duplicate, and resident cells must not
-    be rewritten (file count in untouched cells unchanged)."""
-    import os
-
+    be rewritten (untouched cells keep their directory)."""
     from pyspark.sql import functions as F
 
     from spark_streaming_with_debezium_spark.llm.ivf_index import IvfIndex
@@ -622,18 +623,14 @@ def test_ivf_upsert_serves_new_vectors_without_rebuild(spark, sf_dir, tmp_path):
     extra = emb.filter(F.col("vec_id") % 2 == 1).limit(20)
     idx.build(base)
 
-    def files_per_cell():
-        root = idx._data_dir
-        return {
-            d: len([f for f in os.listdir(os.path.join(root, d))
-                    if f.endswith(".parquet")])
-            for d in os.listdir(root) if d.startswith("cell=")
-        }
+    def cell_dirs():
+        # cell → its immutable directory, as the index manifest names it
+        return Manifest.open(idx.fs, idx.path).named("cell/")
 
-    before = files_per_cell()
+    before = cell_dirs()
     idx.upsert(extra)
     idx.upsert(extra)  # re-delivery: left-anti drop, no duplicates
-    total = spark.read.parquet(idx._data_dir).count()
+    total = idx.read().count()
     assert total == base.count() + extra.count()
 
     probe = extra.limit(3)
@@ -647,16 +644,16 @@ def test_ivf_upsert_serves_new_vectors_without_rebuild(spark, sf_dir, tmp_path):
         norm,
     )
 
-    after = files_per_cell()
+    after = cell_dirs()
     assigned = nearest_cells(
         extra.select("vec_id", "embedding").withColumn(
             "nrm", norm(F.col("embedding"))
         ),
-        spark.read.parquet(idx._cent_dir),
+        idx._centroids(idx._manifest()),
         "embedding", "nrm", 1, "cell",
     )
     touched_cells = {
-        f"cell={r['cell']}" for r in assigned.select("cell").distinct().collect()
+        str(r["cell"]) for r in assigned.select("cell").distinct().collect()
     }
     for cell, n in before.items():
         if cell not in touched_cells:
@@ -681,8 +678,7 @@ def test_ivf_upsert_replaces_changed_embeddings(spark, sf_dir, tmp_path):
     idx = IvfIndex(spark, str(tmp_path / "ivf"))
     emb = load_table(spark, sf_dir, "embeddings")
     idx.build(emb)
-    data = spark.read.parquet(idx._data_dir)
-    n0 = data.count()
+    n0 = idx.read().count()
 
     # Re-deliver 10 existing ids carrying ANOTHER vector's embedding —
     # guaranteed-different values, often a different nearest cell.
@@ -705,7 +701,7 @@ def test_ivf_upsert_replaces_changed_embeddings(spark, sf_dir, tmp_path):
     expected = {r["vec_id"]: r["embedding"] for r in moved.collect()}
 
     idx.upsert(moved)
-    after = spark.read.parquet(idx._data_dir)
+    after = idx.read()
     assert after.count() == n0  # replaced, not duplicated
     got = {
         r["vec_id"]: r["embedding"]
@@ -727,16 +723,11 @@ def test_ivf_upsert_replaces_changed_embeddings(spark, sf_dir, tmp_path):
     }
     assert sidecar == actual
 
-    # Pre-sidecar layout (index built before the idmap existed): drop
-    # the sidecar — upsert must fall back to the full-projection scan
-    # and still deliver identical true-upsert semantics.
-    import shutil
-
-    shutil.rmtree(idx._idmap_dir)
+    # a second change of the same ids lands the same way
     moved2 = moved.withColumn("embedding", F.reverse("embedding"))
     expected2 = {r["vec_id"]: r["embedding"] for r in moved2.collect()}
     idx.upsert(moved2)
-    after2 = spark.read.parquet(idx._data_dir)
+    after2 = idx.read()
     assert after2.count() == n0
     got2 = {
         r["vec_id"]: r["embedding"]
@@ -758,7 +749,7 @@ def test_ivf_pq_search_recall_and_code_only_scan(spark, sf_dir, tmp_path):
     e = load_table(spark, sf_dir, "embeddings")
     idx = IvfIndex(spark, str(tmp_path / "ivfpq"))
     idx.build(e, pq_m=8)
-    stored = spark.read.parquet(str(tmp_path / "ivfpq" / "cells"))
+    stored = idx.read()
     assert "pq_code" in stored.columns
     assert stored.filter(F.size("pq_code") != 8).count() == 0
 
@@ -832,18 +823,12 @@ def test_ivf_pq_upsert_encodes_with_frozen_books(spark, sf_dir, tmp_path):
     e = load_table(spark, sf_dir, "embeddings")
     idx = IvfIndex(spark, str(tmp_path / "ivfpq"))
     idx.build(e.filter(F.col("vec_id") >= 8), pq_m=8)
-    books_before = sorted(
-        (r.m, r.code, tuple(r.cv))
-        for r in spark.read.parquet(str(tmp_path / "ivfpq" / "pq_books")).collect()
-    )
+    books_before = idx._load_books(idx._manifest().path("pq_books"))
     new = e.filter(F.col("vec_id") < 8)
     idx.upsert(new)
-    books_after = sorted(
-        (r.m, r.code, tuple(r.cv))
-        for r in spark.read.parquet(str(tmp_path / "ivfpq" / "pq_books")).collect()
-    )
+    books_after = idx._load_books(idx._manifest().path("pq_books"))
     assert books_before == books_after
-    stored = spark.read.parquet(str(tmp_path / "ivfpq" / "cells"))
+    stored = idx.read()
     assert stored.filter(F.col("vec_id") < 8).count() == 8
     assert stored.filter(F.col("pq_code").isNull()).count() == 0
     # a query finds ITS OWN upserted twin region: searching with an
@@ -864,10 +849,10 @@ def test_ivf_rebuild_without_pq_clears_stale_codebooks(spark, sf_dir, tmp_path):
     e = load_table(spark, sf_dir, "embeddings")
     idx = IvfIndex(spark, str(tmp_path / "ivf"))
     idx.build(e, pq_m=8)
-    assert idx.fs.exists(idx._books_dir)
+    assert "pq_books" in idx._manifest().entries
 
     idx.build(e, pq_m=0)  # rebuild WITHOUT PQ
-    assert not idx.fs.exists(idx._books_dir), "stale pq_books survived"
+    assert "pq_books" not in idx._manifest().entries, "stale pq_books survived"
     with pytest.raises(ValueError, match="without PQ"):
         idx.search_pq(e.filter(F.col("vec_id") < 2))
     # upsert must take the plain (non-PQ) path cleanly

@@ -63,35 +63,14 @@ def test_synthetic_envelope_faces_spread_is_guarded(spark, sf_dir):
         assert txt.count("RoundRobinPartitioning") == 1, (name, txt)
 
 
-def test_similarity_packed_candidates_match_unpacked(spark, sf_dir):
-    """The packed single-long candidate-pair key (VERDICT r13 item 5)
-    must produce the exact same (user_a, user_b) set and dtypes as the
-    two-long form it replaces."""
-    from spark_streaming_with_debezium_spark.operators.more_relational import (
-        _similarity_candidates,
-        _user_day_series,
-    )
-
-    ud = _user_day_series(spark, sf_dir)
-    plain = _similarity_candidates(ud, min_days=5, pack_ids=False)
-    packed = _similarity_candidates(ud, min_days=5, pack_ids=True)
-    assert dict(plain.dtypes) == dict(packed.dtypes)
-    a = {(r.user_a, r.user_b) for r in plain.collect()}
-    b = {(r.user_a, r.user_b) for r in packed.collect()}
-    assert a == b
-    assert len(a) > 0  # vacuous otherwise — min_days=5 hits at sf0.001
-
-
 def test_similarity_scale_flags_local_regime(spark, sf_dir):
-    """On the shipped single-split testdata both guards must engage
-    (spread on, ids provably < 2^31 so packing on)."""
+    """On the shipped single-split testdata the spread guard must
+    engage."""
     from spark_streaming_with_debezium_spark.operators.more_relational import (
         _similarity_scale_flags,
     )
 
-    spread, pack = _similarity_scale_flags(spark, sf_dir)
-    assert spread is True
-    assert pack is True
+    assert _similarity_scale_flags(spark, sf_dir) is True
 
 
 def test_concurrency_bounds_single_sessionizer_evaluation(spark, sf_dir):

@@ -3,13 +3,14 @@ pruning (only touched buckets rewritten)."""
 
 from __future__ import annotations
 
-import os
+import re
 
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
 from spark_streaming_with_debezium_spark.operators.skew import salted_join
 from spark_streaming_with_debezium_spark.sources.tables import load_table
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 
 def test_salted_join_exact(spark, sf_dir):
@@ -56,23 +57,19 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     )
     state.init(snapshot)
 
-    def mtimes():
-        out = {}
-        for d in os.listdir(state.path):
-            if d.startswith("_bucket="):
-                full = os.path.join(state.path, d)
-                out[d] = max(
-                    os.path.getmtime(os.path.join(full, f)) for f in os.listdir(full)
-                )
-        return out
+    def bucket_dirs():
+        # bucket → its immutable directory, as the manifest names it
+        return Manifest.open(state.fs, state.path).named("bucket/")
 
-    before = mtimes()
+    before = bucket_dirs()
+    assert len(before) == 16
     changes = spark.createDataFrame(
         [(7, "v7b", False)], "id long, val string, deleted boolean"
     )
     state.merge(changes)
-    after = mtimes()
-    changed = {d for d in after if after[d] != before.get(d)}
+    after = bucket_dirs()
+    assert set(after) == set(before)
+    changed = {b for b in after if after[b] != before[b]}
     assert len(changed) == 1, f"expected 1 touched bucket, got {changed}"
     # and the data is correct
     vals = {r.id: r.val for r in state.read().collect()}
@@ -82,7 +79,7 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
 def test_state_table_lookup_prunes_buckets(spark, tmp_path):
     """lookup(keys): exact point-lookup semantics, and the plan reads
     only the buckets the requested keys hash into (same pruning as
-    merge — asserted via the partition filter in the scan)."""
+    merge — asserted via the number of paths the scan reads)."""
     state = ParquetStateTable(spark, str(tmp_path / "st"), ["id"], n_buckets=16)
     state.init(
         spark.createDataFrame([(i, f"v{i}") for i in range(500)], "id long, val string")
@@ -91,55 +88,19 @@ def test_state_table_lookup_prunes_buckets(spark, tmp_path):
     got = {r["id"]: r["val"] for r in state.lookup(keys).collect()}
     assert got == {3: "v3", 250: "v250", 499: "v499"}  # 9999 absent
 
-    # pruning: the scan's plan must carry a _bucket IN (...) filter with
-    # fewer buckets than the table has
+    # pruning: the scan reads the bucket directories by path, and only
+    # the (at most 4) buckets the keys hash into, not all 16
     plan = state.lookup(keys)._jdf.queryExecution().executedPlan().toString()
-    assert "_bucket" in plan
+    n_paths = re.search(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert n_paths and int(n_paths.group(1)) <= 4, plan
     empty = state.lookup(spark.createDataFrame([], "id long"))
     assert empty.count() == 0
 
 
-def test_bucket_compaction(spark, tmp_path):
-    """Fragmented buckets get rewritten to one file; data unchanged.
-
-    Merges themselves never fragment (each touched bucket is swapped
-    whole), so fragment one bucket by hand — split its file into
-    per-row-group pieces the way an external appender would leave them.
-    """
-    import pyarrow.parquet as pq
-
-    state = ParquetStateTable(spark, str(tmp_path / "st"), ["id"], n_buckets=2)
-    state.init(
-        spark.createDataFrame([(i, f"v{i}") for i in range(50)], "id long, v string")
-    )
-    before = sorted(map(tuple, state.read().collect()))
-
-    bucket_dirs = [d for d in os.listdir(state.path) if d.startswith("_bucket=")]
-    frag_dir = os.path.join(state.path, bucket_dirs[0])
-    src_files = [f for f in os.listdir(frag_dir) if f.endswith(".parquet")]
-    table = pq.read_table(os.path.join(frag_dir, src_files[0]))
-    os.remove(os.path.join(frag_dir, src_files[0]))
-    half = table.num_rows // 2
-    pq.write_table(table.slice(0, half), os.path.join(frag_dir, "part-a.parquet"))
-    pq.write_table(table.slice(half), os.path.join(frag_dir, "part-b.parquet"))
-    pq.write_table(table.slice(0, 0), os.path.join(frag_dir, "part-c.parquet"))
-
-    n = state.compact_buckets(min_files=2)
-    assert n == 1
-    after = sorted(map(tuple, state.read().collect()))
-    assert after == before
-    files = [f for f in os.listdir(frag_dir) if f.endswith(".parquet")]
-    assert len(files) == 1
-
-
 def test_rebucket_migrates_layout_and_persists_modulus(spark, tmp_path):
-    """rebucket: all rows preserved under the new layout, later merges
-    route by the STORED modulus even when a reader reopens with a stale
-    constructor n_buckets, and the crash-parked old layout is either
-    rolled back (live dir missing) or dropped (swap completed)."""
-    import os
-    import shutil
-
+    """rebucket: all rows preserved under the new layout, and later
+    merges route by the STORED modulus even when a reader reopens with a
+    stale constructor n_buckets."""
     from pyspark.sql import functions as F
 
     from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
@@ -154,11 +115,10 @@ def test_rebucket_migrates_layout_and_persists_modulus(spark, tmp_path):
     before = sorted(tuple(r) for r in st.read().collect())
     st.rebucket(16)
     assert st.n_buckets == 16
-    dirs = [d for d in os.listdir(path) if d.startswith("_bucket=")]
-    assert len(dirs) == 16
+    assert len(Manifest.open(st.fs, path).named("bucket/")) == 16
     assert sorted(tuple(r) for r in st.read().collect()) == before
 
-    # Stale reader: constructor says 4, the meta sidecar says 16 — the
+    # Stale reader: constructor says 4, the manifest says 16 — the
     # stored modulus must win or merges would route keys to wrong dirs.
     stale = ParquetStateTable(spark, path, ["id"], n_buckets=4)
     assert stale.n_buckets == 16
@@ -168,20 +128,6 @@ def test_rebucket_migrates_layout_and_persists_modulus(spark, tmp_path):
     stale.merge(changes)
     got = {r["id"]: r["v"] for r in stale.read().collect()}
     assert got[5] == 999 and got[1000] == 17 and len(got) == 201
-
-    # Crash between park and land: live dir gone, old parked → reopening
-    # must roll the parked layout back.
-    os.rename(path, path + "_rebucket_old")
-    recovered = ParquetStateTable(spark, path, ["id"], n_buckets=4)
-    assert recovered.n_buckets == 16
-    assert {r["id"] for r in recovered.read().collect()} == set(got)
-    assert not os.path.exists(path + "_rebucket_old")
-
-    # Completed swap with leftover park: parked copy is garbage.
-    shutil.copytree(path, path + "_rebucket_old")
-    again = ParquetStateTable(spark, path, ["id"], n_buckets=4)
-    assert again.n_buckets == 16
-    assert not os.path.exists(path + "_rebucket_old")
 
 
 def test_hot_key_batch_through_merge(spark, tmp_path):

@@ -1,8 +1,8 @@
 """StateFS abstraction: both backends behave identically, and the
-ParquetStateTable commit protocol runs end-to-end through the Hadoop
-FileSystem client (``file://`` scheme) — the proof that the state
-layer's park/land/drop swaps are not bound to POSIX ``os.*`` calls and
-would execute against hdfs:// / s3a:// paths unchanged."""
+manifest commit of every state store runs end-to-end through the Hadoop
+FileSystem client (``file://`` scheme) — the proof that the state layer
+is not bound to POSIX ``os.*`` calls and would execute against
+hdfs:// / s3a:// paths unchanged."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ from spark_streaming_with_debezium_spark.storage.fs import (
     LocalFS,
     fs_for_path,
 )
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 
 
 def _backends(spark, tmp_path):
@@ -57,8 +58,8 @@ def test_fs_for_path_scheme_routing(spark, tmp_path):
 
 def test_state_table_lifecycle_on_hadoop_fs(spark, tmp_path):
     """The full ParquetStateTable protocol — init, merge
-    (update/delete/insert with touched-bucket swap), evolve, rebucket
-    with a stale reader, compact sweep, empty re-init — against a
+    (update/delete/insert rewriting the touched buckets), evolve,
+    rebucket with a stale reader, empty re-init — against a
     ``file://`` URI, i.e. entirely through the Hadoop FileSystem
     client."""
     path = "file://" + str(tmp_path / "state")
@@ -97,8 +98,11 @@ def test_state_table_lifecycle_on_hadoop_fs(spark, tmp_path):
     got = {r["id"]: (r["v"], r["w"]) for r in stale.read().collect()}
     assert got[7] == (777, 1) and len(got) == 100
 
-    assert st.fs.exists(path + "/_table_meta.json")
-    st.compact_buckets(min_files=1)  # exercises the listdir+swap path
+    # one manifest and the live data directories, nothing else
+    m = Manifest.open(st.fs, path)
+    assert m.meta["n_buckets"] == 16
+    live = {rel.split("/")[0] for rel in m.entries.values()}
+    assert set(st.fs.listdir(path)) == live | {f"_manifest.{m.version}.json"}
 
     st.init(spark.createDataFrame([], "id long, v long, w long"))
     assert st.read().count() == 0
@@ -106,59 +110,10 @@ def test_state_table_lifecycle_on_hadoop_fs(spark, tmp_path):
     assert reader.n_buckets == 16  # meta survived the empty re-init
 
 
-def test_crash_recovery_protocols_on_hadoop_fs(spark, tmp_path):
-    """The two park/land/drop swap protocols recover from planted crash
-    states when ALL file operations go through the Hadoop client — the
-    recovery logic is protocol-level, not POSIX-level."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_with_debezium_spark.cdc.timetravel import (
-        TimeTravelStateTable,
-    )
-
-    # --- rebucket crash: parked old layout, live dir missing → rollback
-    path = "file://" + str(tmp_path / "st")
-    st = ParquetStateTable(spark, path, ["id"], n_buckets=4)
-    st.init(spark.range(50).select("id", (F.col("id") * 2).alias("v")))
-    st.rebucket(8)
-    before = sorted(tuple(r) for r in st.read().collect())
-    st.fs.rename(path, path + "_rebucket_old")  # simulate crash mid-swap
-    re = ParquetStateTable(spark, path, ["id"], n_buckets=4)
-    assert re.n_buckets == 8
-    assert sorted(tuple(r) for r in re.read().collect()) == before
-    assert not re.fs.exists(path + "_rebucket_old")
-
-    # --- compact_log crash BEFORE swap (tmp+marker+old snapshot) → rollback
-    tpath = "file://" + str(tmp_path / "tt")
-    t = TimeTravelStateTable(spark, tpath, ["id"], n_buckets=4)
-    t.init(spark.createDataFrame([(1, "a")], "id long, v string"))
-    chg = "id long, v string, deleted boolean"
-    t.merge_logged(spark.createDataFrame([(2, "b", False)], chg))
-    t.merge_logged(spark.createDataFrame([(3, "c", False)], chg))
-    expect2 = sorted(tuple(r) for r in t.as_of(2).collect())
-    tmp_dir = t._snap_dir + "_folding"
-    pend = t._base_seq_path + ".pending"
-    t.as_of(1).write.mode("overwrite").parquet(tmp_dir)
-    t.fs.write_text_atomic(pend, "1")
-    re1 = TimeTravelStateTable(spark, tpath, ["id"], n_buckets=4)
-    assert not re1.fs.isdir(tmp_dir) and not re1.fs.exists(pend)
-    assert re1._base_seq == 0
-    assert sorted(tuple(r) for r in re1.as_of(2).collect()) == expect2
-
-    # --- crash MID-swap (snapshot gone, tmp+marker present) → roll forward
-    re1.as_of(1).write.mode("overwrite").parquet(tmp_dir)
-    re1.fs.write_text_atomic(pend, "1")
-    re1.fs.delete(re1._snap_dir)
-    re2 = TimeTravelStateTable(spark, tpath, ["id"], n_buckets=4)
-    assert re2._base_seq == 1
-    assert re2.fs.isdir(re2._snap_dir) and not re2.fs.exists(pend)
-    assert sorted(tuple(r) for r in re2.as_of(2).collect()) == expect2
-
-
 def test_timetravel_and_txn_buffer_on_hadoop_fs(spark, tmp_path):
-    """The versioned stores built on the same protocols — time-travel
-    log fold and the transaction buffer's write-then-pointer commit —
-    also run fully through the Hadoop client."""
+    """The other stores on the same manifest commit — time-travel log
+    fold and the transaction buffer — also run fully through the Hadoop
+    client."""
     from spark_streaming_with_debezium_spark.cdc.timetravel import (
         TimeTravelStateTable,
     )

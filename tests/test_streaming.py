@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 from spark_streaming_with_debezium_spark.cdc.envelope import TableSpec
 from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
 from spark_streaming_with_debezium_spark.cdc.pipeline import run_cdc_stream
+from spark_streaming_with_debezium_spark.storage.manifest import Manifest
 from spark_streaming_with_debezium_spark.streaming.jobs import (
     dedup_within_watermark,
     events_file_stream,
@@ -65,6 +66,13 @@ def _env(op, i, off, email=None):
     )
 
 
+def _store_rows(store):
+    """Every row of a SignatureStore (the probe of all its partitions)."""
+    from spark_streaming_with_debezium_spark.streaming.neardup import N_STORE_DIRS
+
+    return store.probe(list(range(N_STORE_DIRS)))
+
+
 def test_cdc_stream_with_checkpoint_restart(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -93,50 +101,31 @@ def test_cdc_stream_with_checkpoint_restart(spark, tmp_path):
 
 
 def test_cdc_stream_compaction_bounds_fragmentation(spark, tmp_path):
-    """The opt-in maintenance hook must rewrite fragmented buckets as
-    part of the stream: pre-fragment a bucket (simulating crash-
-    recovered/externally-appended files), run the stream with
-    compaction enabled, and assert every bucket is back under the
-    fragment threshold with no rows lost."""
-    import shutil
-
+    """A stream with the maintenance cadence on (which compacts only a
+    near-dup signature store, absent here) applies its batch, and every
+    bucket still holds exactly one file: a merge rewrites each touched
+    bucket whole, so the state never fragments."""
     state = ParquetStateTable(spark, str(tmp_path / "state"), ["id"], n_buckets=4)
     state.init(
         spark.createDataFrame([(i, f"u{i}@x.com") for i in range(20)],
                               "id long, email string")
     )
-    # fragment one bucket: append 5 tiny parquet files externally
-    bucket_dirs = [d for d in os.listdir(state.path) if d.startswith("_bucket=")]
-    target = os.path.join(state.path, sorted(bucket_dirs)[0])
-    frag_src = str(tmp_path / "frag")
-    spark.createDataFrame([], "id long, email string").write.mode("overwrite").parquet(frag_src)
-    for i in range(5):
-        for f in os.listdir(frag_src):
-            if f.endswith(".parquet"):
-                shutil.copy(os.path.join(frag_src, f), os.path.join(target, f"frag_{i}.parquet"))
-    n_before = len([f for f in os.listdir(target) if f.endswith(".parquet")])
-    assert n_before >= 5, "pre-fragmentation failed"
-    rows_before = sorted((r.id, r.email) for r in state.read().collect())
-
     src = tmp_path / "src"
     src.mkdir()
     (src / "b1.json").write_text("\n".join([_env("u", 0, 0, "new0@x.com")]))
     stream = spark.readStream.schema(RAW_SCHEMA).json(str(src))
     run_cdc_stream(
-        stream, SPEC, state, str(tmp_path / "ckpt"),
-        compact_every_n_batches=1, compact_min_files=4,
+        stream, SPEC, state, str(tmp_path / "ckpt"), compact_every_n_batches=1,
     ).awaitTermination()
 
-    for d in os.listdir(state.path):
-        if d.startswith("_bucket="):
-            files = [
-                f for f in os.listdir(os.path.join(state.path, d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) < 4, f"{d} still fragmented: {len(files)} files"
+    buckets = Manifest.open(state.fs, state.path).named("bucket/")
+    assert buckets
+    for b, d in buckets.items():
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, f"bucket {b} fragmented: {len(files)} files"
     rows_after = sorted((r.id, r.email) for r in state.read().collect())
     expected = [(i, "new0@x.com" if i == 0 else f"u{i}@x.com") for i in range(20)]
-    assert rows_after == expected, (rows_before, rows_after)
+    assert rows_after == expected
 
 
 def test_cdc_stream_checkpoint_restart_after_registry_evolution(spark, tmp_path):
@@ -533,27 +522,23 @@ def test_neardup_batch_replay_idempotent(spark, tmp_path):
         r.doc_id for r in dedup_batch_against_store(docs, store).collect()
     )
     assert kept1 == [1, 2], f"first run survivors wrong: {kept1}"
-    n_store1 = spark.read.parquet(store.path).count()
+    n_store1 = _store_rows(store).count()
 
     # replay the SAME batch against the already-mutated store
     kept2 = sorted(
         r.doc_id for r in dedup_batch_against_store(docs, store).collect()
     )
     assert kept2 == kept1, f"replay diverged: {kept2} vs {kept1}"
-    n_store2 = spark.read.parquet(store.path).count()
+    n_store2 = _store_rows(store).count()
     assert n_store2 == n_store1, (
         f"replay duplicated store rows: {n_store1} -> {n_store2}"
     )
 
 
 def test_neardup_partial_append_replay_heals_bands(spark, tmp_path):
-    """A crashed store.append can commit only SOME of a doc's band rows
-    (parquet multi-file commit is not atomic). Replay must re-insert the
-    MISSING bands — a doc_id-level anti-join would skip the doc forever
-    and leave it under-banded (r3 advice)."""
-    import os
-    import shutil
-
+    """Replay against a store holding only SOME of a doc's band rows
+    must re-insert the MISSING bands — a doc_id-level anti-join would
+    skip the doc forever and leave it under-banded (r3 advice)."""
     from pyspark.sql import functions as F
 
     from spark_streaming_with_debezium_spark.streaming.neardup import (
@@ -572,21 +557,19 @@ def test_neardup_partial_append_replay_heals_bands(spark, tmp_path):
     docs = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
     store = SignatureStore(spark, str(tmp_path / "sigs"))
     dedup_batch_against_store(docs, store).collect()
-    full = spark.read.parquet(store.path)
+    full = _store_rows(store)
     bands_doc1 = full.filter(F.col("doc_id") == 1).count()
     assert bands_doc1 == 8, f"expected 8 band rows for doc 1: {bands_doc1}"
 
-    # simulate the partial commit: drop doc 1's bands >= 4 from the store
+    # a store missing doc 1's bands >= 4
     pruned = full.filter(~((F.col("doc_id") == 1) & (F.col("band") >= 4)))
-    tmp_store = str(tmp_path / "sigs_rewrite")
-    pruned.repartition("_bdir").write.partitionBy("_bdir").parquet(tmp_store)
-    shutil.rmtree(store.path)
-    os.rename(tmp_store, store.path)
-    assert spark.read.parquet(store.path).filter(F.col("doc_id") == 1).count() == 4
+    store = SignatureStore(spark, str(tmp_path / "sigs_partial"))
+    store.append(pruned)
+    assert _store_rows(store).filter(F.col("doc_id") == 1).count() == 4
 
     # replay the same batch: missing bands are re-inserted, nothing dupes
     dedup_batch_against_store(docs, store).collect()
-    healed = spark.read.parquet(store.path)
+    healed = _store_rows(store)
     per_doc = {
         r.doc_id: r.n
         for r in healed.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
@@ -598,15 +581,9 @@ def test_neardup_partial_append_replay_heals_bands(spark, tmp_path):
 
 
 def test_signature_store_compact_and_crash_recovery(spark, tmp_path):
-    """compact() swaps partitions via rename-aside; a crash between the
-    renames leaves the old partition parked, and the next
-    SignatureStore() restores it — accepted signatures are never lost
-    (r3 advice: the old rmtree-then-move could drop a partition)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    """compact() rewrites each fragmented partition's append
+    directories into one, in one commit, without changing the store's
+    content — accepted signatures are never lost."""
     from spark_streaming_with_debezium_spark.streaming.neardup import (
         SignatureStore,
         dedup_batch_against_store,
@@ -625,49 +602,18 @@ def test_signature_store_compact_and_crash_recovery(spark, tmp_path):
         docs = spark.createDataFrame([(i * 10 + 1, w)], "doc_id long, text string")
         dedup_batch_against_store(docs, store).collect()
     before = sorted(
-        tuple(r) for r in spark.read.parquet(store.path)
-        .select("doc_id", "band", "bucket").collect()
+        tuple(r) for r in _store_rows(store).select("doc_id", "band", "bucket").collect()
     )
+    fragmented = store._parts(store._manifest())
+    assert max(len(v) for v in fragmented.values()) >= 2
 
-    # normal compact: content identical, no aside/tmp leftovers
-    store.compact(min_files=2)
+    # content identical, each compacted partition down to one directory
+    assert store.compact(min_files=2) == sum(len(v) >= 2 for v in fragmented.values())
     after = sorted(
-        tuple(r) for r in spark.read.parquet(store.path)
-        .select("doc_id", "band", "bucket").collect()
+        tuple(r) for r in _store_rows(store).select("doc_id", "band", "bucket").collect()
     )
     assert after == before, "compact changed store content"
-    assert not os.path.isdir(store.path + "_aside")
-
-    # crash between the renames: park one live partition in the aside
-    # root (exactly the state after os.rename(dst, parked))
-    part = next(
-        d for d in os.listdir(store.path) if d.startswith("_bdir=")
-    )
-    aside_root = store.path + "_aside"
-    os.makedirs(aside_root, exist_ok=True)
-    os.rename(
-        os.path.join(store.path, part), os.path.join(aside_root, part)
-    )
-    store2 = SignatureStore(spark, store.path)  # recovery sweep runs
-    restored = sorted(
-        tuple(r) for r in spark.read.parquet(store2.path)
-        .select("doc_id", "band", "bucket").collect()
-    )
-    assert restored == before, "recovery lost the parked partition"
-    assert not os.path.isdir(aside_root)
-
-    # crash after the swap (live + stale aside copy): aside is swept
-    os.makedirs(aside_root, exist_ok=True)
-    shutil.copytree(
-        os.path.join(store.path, part), os.path.join(aside_root, part)
-    )
-    SignatureStore(spark, store.path)
-    assert not os.path.isdir(aside_root)
-    final = sorted(
-        tuple(r) for r in spark.read.parquet(store.path)
-        .select("doc_id", "band", "bucket").collect()
-    )
-    assert final == before
+    assert all(len(v) == 1 for v in store._parts(store._manifest()).values())
 
 
 def test_cdc_stream_with_neardup_suppression(spark, tmp_path):
@@ -1498,19 +1444,10 @@ def test_rolling_hll_stream_matches_batch_and_replays_idempotently(
 
 
 def test_rolling_hll_state_swap_crash_recovery(spark, tmp_path):
-    """ADVICE r8: the state swap must survive a crash at ANY point of
-    the rename sequence. Simulate both crash windows and prove
-    ``_recover_swapped_state`` restores a complete state copy: (a) state
-    renamed away with a COMPLETE _tmp present (crash between the two
-    renames) → _tmp wins; (b) state absent with a PARTIAL _tmp (no
-    _SUCCESS; crash mid-write after an earlier swap moved state to
-    _old) → _old wins and the junk _tmp is discarded. Then prove a
-    replayed stream over the recovered state stays idempotent."""
-    import os
-    import shutil
-
+    """A fresh-checkpoint replay over a committed sketch state stays
+    idempotent (HLL union), and the state reads back from its manifest
+    unchanged in between."""
     from spark_streaming_with_debezium_spark.streaming.jobs import (
-        _recover_swapped_state,
         events_file_stream,
         rolling_hll_estimates,
         run_rolling_hll_stream,
@@ -1533,40 +1470,8 @@ def test_rolling_hll_state_swap_crash_recovery(spark, tmp_path):
         str(r.day): r.est_users_7d
         for r in rolling_hll_estimates(spark, state).collect()
     }
+    assert baseline
 
-    # (a) crash between rename(state→_old) and rename(_tmp→state):
-    # both copies exist, _tmp is the newer committed merge and wins
-    shutil.copytree(state, state + "_old")
-    os.rename(state, state + "_tmp")
-    assert os.path.exists(os.path.join(state + "_tmp", "_SUCCESS"))
-    _recover_swapped_state(state)
-    assert os.path.isdir(state)
-    assert not os.path.isdir(state + "_tmp")
-    assert not os.path.isdir(state + "_old")
-    got = {
-        str(r.day): r.est_users_7d
-        for r in rolling_hll_estimates(spark, state).collect()
-    }
-    assert got == baseline
-
-    # (b) crash mid-write: _tmp partial (no _SUCCESS), state already
-    # swapped away to _old by a prior batch → _old restored, junk gone
-    os.rename(state, state + "_old")
-    os.makedirs(state + "_tmp")
-    with open(os.path.join(state + "_tmp", "part-junk.parquet"), "w") as f:
-        f.write("truncated")
-    _recover_swapped_state(state)
-    assert os.path.isdir(state)
-    assert not os.path.isdir(state + "_tmp")
-    assert not os.path.isdir(state + "_old")
-    got = {
-        str(r.day): r.est_users_7d
-        for r in rolling_hll_estimates(spark, state).collect()
-    }
-    assert got == baseline
-
-    # recovered state keeps serving the stream: full replay on a fresh
-    # checkpoint must not inflate estimates (idempotent HLL union)
     run_rolling_hll_stream(
         events_file_stream(spark, str(src), max_files_per_trigger=None),
         state,
@@ -1585,21 +1490,18 @@ def test_cms_token_stream_exactly_once(spark, tmp_path, caplog):
     safety needs the batch-id fence. Prove (a) two-batch incremental
     counters equal the one-shot batch sketch over the same rows
     exactly, (b) a replayed batch id is fenced (counters unchanged),
-    (c) a full re-drain on a fresh checkpoint is fenced end-to-end,
-    (d) the rename-swap crash recovery applies to this state too, and
+    (c) a full re-drain on a fresh checkpoint is fenced end-to-end, and
     (e) point estimates obey the CMS contract (est >= exact count)."""
     import json as _json
-    import os
-    import shutil
 
     from spark_streaming_with_debezium_spark.llm.corpus_rules import (
         normalize_text,
     )
     from spark_streaming_with_debezium_spark.streaming.jobs import (
-        _recover_swapped_state,
         cms_token_estimates,
         docs_file_stream,
         run_cms_token_stream,
+        sketch_state,
     )
 
     src = tmp_path / "docs"
@@ -1616,7 +1518,7 @@ def test_cms_token_stream_exactly_once(spark, tmp_path, caplog):
         docs_file_stream(spark, str(src)), state, str(tmp_path / "ckpt")
     )
     cells = {
-        (r.i, r.bucket): r.c for r in spark.read.parquet(state).collect()
+        (r.i, r.bucket): r.c for r in sketch_state(spark, state).collect()
     }
 
     # (a) equals the one-shot sketch over all rows
@@ -1650,7 +1552,7 @@ def test_cms_token_stream_exactly_once(spark, tmp_path, caplog):
         docs_file_stream(spark, str(src)), state, str(tmp_path / "ckpt")
     )
     assert cells == {
-        (r.i, r.bucket): r.c for r in spark.read.parquet(state).collect()
+        (r.i, r.bucket): r.c for r in sketch_state(spark, state).collect()
     }
 
     # (c) full re-drain on a FRESH checkpoint restarts batch ids at 0,
@@ -1668,20 +1570,11 @@ def test_cms_token_stream_exactly_once(spark, tmp_path, caplog):
             docs_file_stream(spark, str(src)), state, str(tmp_path / "ckpt2")
         )
     assert cells == {
-        (r.i, r.bucket): r.c for r in spark.read.parquet(state).collect()
+        (r.i, r.bucket): r.c for r in sketch_state(spark, state).collect()
     }
     assert any(
         "stream identity changed" in rec.message for rec in caplog.records
     ), "cross-identity fence must warn (checkpoint-reset detectability)"
-
-    # (d) crash-window recovery: state renamed away with complete _tmp
-    shutil.copytree(state, state + "_old")
-    os.rename(state, state + "_tmp")
-    _recover_swapped_state(state)
-    assert os.path.isdir(state) and not os.path.isdir(state + "_tmp")
-    assert cells == {
-        (r.i, r.bucket): r.c for r in spark.read.parquet(state).collect()
-    }
 
     # (e) point estimates from state alone: est >= exact, exact for
     # collision-free tokens in this tiny vocabulary
@@ -1779,7 +1672,7 @@ def test_ivf_upsert_stream_matches_batch_and_replays(spark, tmp_path, sf_dir):
 
     # (c) no stale duplicates: each upserted id appears in exactly one cell
     rows = (
-        spark.read.parquet(str(tmp_path / "ivf_s" / "cells"))
+        IvfIndex(spark, s_path).read()
         .filter(F.col("vec_id").isin([100, 101, 10_000, 10_001, 10_002, 10_003]))
         .groupBy("vec_id")
         .count()

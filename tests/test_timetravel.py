@@ -181,133 +181,6 @@ def test_compact_log_retention(spark, tmp_path):
     assert _rows(re2.as_of(4)) == [(2, "b"), (3, "c"), (4, "d")] == _rows(re2.read())
 
 
-def test_compact_log_crash_recovery(spark, tmp_path):
-    """A crash mid-compaction must never serve a corrupted as_of:
-    before the swap the fold rolls BACK; after the swap (base not yet
-    persisted) it rolls FORWARD on reopen."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "tt")
-    t = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    t.init(spark.createDataFrame([(1, "a")], "id long, v string"))
-    chg = "id long, v string, deleted boolean"
-    t.merge_logged(spark.createDataFrame([(2, "b", False)], chg))
-    t.merge_logged(spark.createDataFrame([(3, "c", False)], chg))
-    snap = os.path.join(path, "current")  # not the snapshot; get real paths
-    snap = t._snap_dir
-    tmp_dir = snap + "_folding"
-    pend = t._base_seq_path + ".pending"
-    expect1 = _rows(t.as_of(1))
-    expect2 = _rows(t.as_of(2))
-
-    # --- crash BEFORE the swap: tmp + marker + old snapshot on disk ---
-    t.as_of(1).write.mode("overwrite").parquet(tmp_dir)
-    with open(pend, "w") as f:
-        f.write("1")
-    re = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    assert not os.path.isdir(tmp_dir) and not os.path.exists(pend), "rollback"
-    assert re._base_seq == 0, "rollback must not advance the base"
-    assert _rows(re.as_of(1)) == expect1 and _rows(re.as_of(2)) == expect2
-
-    # --- crash MID-swap: snapshot dir gone, tmp + marker present ---
-    re.as_of(1).write.mode("overwrite").parquet(tmp_dir)
-    with open(pend, "w") as f:
-        f.write("1")
-    shutil.rmtree(snap)
-    re2 = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    assert re2._base_seq == 1, "roll-forward must persist the base"
-    assert os.path.isdir(snap) and not os.path.exists(pend)
-    assert not os.path.isdir(os.path.join(path, "log", "_batch_seq=1")), (
-        "folded partition must be dropped on roll-forward"
-    )
-    assert _rows(re2.as_of(1)) == expect1 and _rows(re2.as_of(2)) == expect2
-    with pytest.raises(ValueError, match="retention horizon"):
-        re2.as_of(0)
-
-
-def test_compact_log_rename_swap_crash_states(spark, tmp_path):
-    """The r3-advice hole: the old rmtree-then-rename swap could crash
-    mid-rmtree and leave a HALF-DELETED snapshot that recovery then
-    served. The swap is now rename-only, so every crash state holds at
-    least one complete snapshot. Exercise the two new intermediate
-    states (between the renames; after both renames) plus the stray
-    aside sweep."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "tt_swap")
-    t = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    t.init(spark.createDataFrame([(1, "a")], "id long, v string"))
-    chg = "id long, v string, deleted boolean"
-    t.merge_logged(spark.createDataFrame([(2, "b", False)], chg))
-    t.merge_logged(spark.createDataFrame([(3, "c", False)], chg))
-    snap, old = t._snap_dir, t._snap_dir + "_old"
-    tmp_dir = snap + "_folding"
-    pend = t._base_seq_path + ".pending"
-    expect1 = _rows(t.as_of(1))
-    expect2 = _rows(t.as_of(2))
-
-    # --- crash BETWEEN the two renames: aside + tmp + marker, no snap ---
-    t.as_of(1).write.mode("overwrite").parquet(tmp_dir)
-    with open(pend, "w") as f:
-        f.write("1")
-    os.rename(snap, old)
-    re = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    assert re._base_seq == 1 and os.path.isdir(snap)
-    assert not os.path.isdir(old) and not os.path.isdir(tmp_dir)
-    assert not os.path.exists(pend)
-    assert _rows(re.as_of(1)) == expect1 and _rows(re.as_of(2)) == expect2
-
-    # --- rebuild a fresh table for the after-both-renames state ---
-    path2 = str(tmp_path / "tt_swap2")
-    t2 = TimeTravelStateTable(spark, path2, ["id"], n_buckets=4)
-    t2.init(spark.createDataFrame([(1, "a")], "id long, v string"))
-    t2.merge_logged(spark.createDataFrame([(2, "b", False)], chg))
-    t2.merge_logged(spark.createDataFrame([(3, "c", False)], chg))
-    snap2, old2 = t2._snap_dir, t2._snap_dir + "_old"
-    tmp2 = snap2 + "_folding"
-    pend2 = t2._base_seq_path + ".pending"
-    e1, e2 = _rows(t2.as_of(1)), _rows(t2.as_of(2))
-    t2.as_of(1).write.mode("overwrite").parquet(tmp2)
-    with open(pend2, "w") as f:
-        f.write("1")
-    os.rename(snap2, old2)
-    os.rename(tmp2, snap2)
-    re2 = TimeTravelStateTable(spark, path2, ["id"], n_buckets=4)
-    assert re2._base_seq == 1 and os.path.isdir(snap2)
-    assert not os.path.isdir(old2) and not os.path.exists(pend2)
-    assert _rows(re2.as_of(1)) == e1 and _rows(re2.as_of(2)) == e2
-
-    # --- stray aside without a marker is swept, snapshot untouched ---
-    shutil.copytree(snap2, old2)
-    re3 = TimeTravelStateTable(spark, path2, ["id"], n_buckets=4)
-    assert not os.path.isdir(old2)
-    assert _rows(re3.as_of(1)) == e1
-
-
-def test_compact_log_swap_never_rmtrees_live_snapshot(spark, tmp_path):
-    """Post-compaction invariant check: a successful compact_log leaves
-    exactly the snapshot dir (no aside, no tmp, no marker) and the
-    folded partitions dropped."""
-    import os
-
-    path = str(tmp_path / "tt_clean")
-    t = TimeTravelStateTable(spark, path, ["id"], n_buckets=4)
-    t.init(spark.createDataFrame([(1, "a")], "id long, v string"))
-    chg = "id long, v string, deleted boolean"
-    t.merge_logged(spark.createDataFrame([(2, "b", False)], chg))
-    t.merge_logged(spark.createDataFrame([(3, "c", False)], chg))
-    expect2 = _rows(t.as_of(2))
-    dropped = t.compact_log(1)
-    assert dropped == 1
-    assert os.path.isdir(t._snap_dir)
-    assert not os.path.isdir(t._snap_dir + "_old")
-    assert not os.path.isdir(t._snap_dir + "_folding")
-    assert not os.path.exists(t._base_seq_path + ".pending")
-    assert _rows(t.as_of(2)) == expect2
-
-
 def test_changes_between_versions(spark, tmp_path):
     """Change feed between two retained versions: inserts/updates carry
     the new image, deletes the old; unchanged keys are absent; the feed
