@@ -33,6 +33,10 @@ WATCH = (
     "ann_matryoshka_recall",
     "embedding_hard_negatives",
     "dedup_neardup_components",
+    "dedup_clusters",
+    "dedup_clusters_ml",
+    "dedup_cluster_keep_best",
+    "split_leakage_safe_groups",
     "graph_connected_components",
     "graph_triangle_count",
     "graph_pagerank",

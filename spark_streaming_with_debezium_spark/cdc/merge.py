@@ -9,9 +9,9 @@ Reproduces the Delta merge of the reference
     WHEN NOT MATCHED [AND NOT s.deleted] THEN INSERT *
 
 without requiring delta-spark: one full-outer join + ``coalesce``
-projection. Catalyst plans it as a single shuffle on the key (or a
-broadcast join when the change batch is small — the common CDC case,
-hinted via ``broadcast_changes``).
+projection. Catalyst plans it as a single shuffle on the key, or AQE
+turns it into a broadcast join when the change batch is small — the
+common CDC case. No broadcast is forced (see ``ParquetStateTable.merge``).
 
 Scale notes (100 TB state):
 - The expensive part is rewriting state. ``apply_changes`` is the pure
@@ -44,14 +44,12 @@ def apply_changes(
     changes: DataFrame,
     key_cols: Sequence[str],
     data_cols: Sequence[str] | None = None,
-    deleted_col: str = "deleted",
-    broadcast_changes: bool = False,
 ) -> DataFrame:
     """Apply a compacted change batch to a target state DataFrame.
 
     ``changes`` must hold at most one row per key (run
     :func:`compact_latest` first) with columns ``key_cols`` +
-    ``data_cols`` + ``deleted_col``. Returns the new state with the
+    ``data_cols`` + ``deleted``. Returns the new state with the
     target's schema.
 
     Semantics per key:
@@ -65,10 +63,8 @@ def apply_changes(
     if data_cols is None:
         data_cols = [c for c in target.columns if c not in key_cols]
     src = changes.select(
-        *key_cols, *[c for c in data_cols], F.col(deleted_col).alias("_deleted")
+        *key_cols, *data_cols, F.col("deleted").alias("_deleted")
     )
-    if broadcast_changes:
-        src = F.broadcast(src)
 
     t = target.alias("t")
     s = src.alias("s")

@@ -288,7 +288,6 @@ def run_cdc_stream(
     compact_every_n_batches: int | None = None,
     neardup_store=None,
     neardup_text_col: str | None = None,
-    neardup_threshold: float = 0.5,
     drift_policy: str | None = None,
     drift_dead_letter_dir: str | None = None,
 ):
@@ -329,12 +328,13 @@ def run_cdc_stream(
 
     ``drift_dead_letter_dir`` changes the destructive-drift outcome
     from fail-the-stream to quarantine-and-continue: the ENTIRE raw
-    batch is appended to the dead-letter path (with ``_batch_id`` and
-    ``_drift_reason`` columns for replay/triage) and its merge is
-    skipped, so one upstream DDL accident doesn't stall every other
-    table sharing the stream. The quarantined batch is replayable
-    after the operator fixes the spec — the at-scale posture for a
-    multi-team CDC bus.
+    batch is written to the dead-letter path, partitioned by
+    ``_batch_id`` and with a ``_drift_reason`` column for replay/triage,
+    and its merge is skipped, so one upstream DDL accident doesn't stall
+    every other table sharing the stream. A replayed batch rewrites its
+    own partition, so it is quarantined once. The quarantined batch is
+    replayable after the operator fixes the spec — the at-scale posture
+    for a multi-team CDC bus.
     """
     if (neardup_store is None) != (neardup_text_col is None):
         raise ValueError(
@@ -358,18 +358,22 @@ def run_cdc_stream(
             except SchemaDriftError as err:
                 if drift_dead_letter_dir is None:
                     raise
+                # one partition per batch_id, overwritten (dynamic
+                # mode): a crash-replay of this batch rewrites its own
+                # partition instead of appending a second copy
                 (
                     projected.withColumn("_batch_id", F.lit(batch_id))
                     .withColumn("_drift_reason", F.lit(str(err)))
-                    .write.mode("append")
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_batch_id")
                     .parquet(drift_dead_letter_dir)
                 )
                 return  # quarantined; stream continues
             live_spec[0] = spec
         if neardup_store is not None:
             batch_apply_with_neardup(
-                projected, spec, state, neardup_store,
-                neardup_text_col, threshold=neardup_threshold,
+                projected, spec, state, neardup_store, neardup_text_col
             )
         else:
             batch_apply(projected, spec, state)

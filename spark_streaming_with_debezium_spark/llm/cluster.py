@@ -3,16 +3,13 @@ pairs → one canonical document per duplicate cluster.
 
 Pairwise dedup (MinHash/SimHash/jaccard) yields EDGES; the keep/drop
 decision needs COMPONENTS (doc A~B, B~C ⇒ {A,B,C} is one cluster even
-if A~C was never scored). Implemented as iterative min-label
-propagation on DataFrames:
-
-    label(v) ← min(label(v), min over neighbors(label(u)))
-
-repeated until fixpoint — O(diameter) joins, and near-dup clusters are
-shallow (diameter ≤ ~log cluster size in practice), so 5-10 iterations
-close 100 TB-scale graphs. Each iteration is one shuffle join on doc
-id; no driver-side graph state (this is the standard large-scale
-connected-components-on-MapReduce recipe).
+if A~C was never scored). Every face here labels components with the
+engine's one connected-components kernel,
+``operators/graph.py:cc_fixed`` — synchronous min-label propagation
+(component = min doc id), one broadcast-labels round per graph-diameter
+step, stopping at the first round that moves no label. Near-dup
+clusters are shallow, so a few rounds close them; :func:`pair_components`
+fails closed when ``DEDUP_CC_ROUNDS`` rounds are not enough.
 """
 
 from __future__ import annotations
@@ -22,67 +19,30 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_streaming_with_debezium_spark.operators.graph import cc_fixed
 from spark_streaming_with_debezium_spark.registry import query
 
+#: Round budget of the dedup cluster faces: rounds needed ≈ the pair
+#: graph's diameter, and a label still moving after this many rounds
+#: raises instead of mislabeling a long chain.
+DEDUP_CC_ROUNDS = 15
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 15,
-) -> DataFrame:
-    """(node, component) from an edge list; component = min node id in
-    the component. Converges when an iteration changes nothing."""
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .persist()
+
+def pair_components(pairs: DataFrame) -> DataFrame:
+    """(node, comp) from a (doc_a, doc_b) edge list; comp = min node id
+    in the component. Raises when a label still moved in the last
+    round (``stable == 0``)."""
+    labs = cc_fixed(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        DEDUP_CC_ROUNDS,
     )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    try:
-        changed = 0
-        for _ in range(max_iter):
-            # candidate label for v = min label among its neighbors u
-            neighbor_min = (
-                edges.join(labels, edges.u == labels.node)
-                .groupBy(F.col("v").alias("node"))
-                .agg(F.min("comp").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .persist()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
-            labels.unpersist() if hasattr(labels, "unpersist") else None
-            labels = new_labels
-            if changed == 0:
-                break
-        if changed != 0:
-            raise RuntimeError(
-                f"connected_components did not converge within {max_iter} "
-                "iterations — long-chain components would get wrong labels; "
-                "raise max_iter (rounds needed ≈ graph diameter)"
-            )
-        return labels.select("node", "comp")
-    finally:
-        edges.unpersist()
+    if labs.filter(F.col("stable") == 0).limit(1).count():
+        raise RuntimeError(
+            f"connected components did not converge within {DEDUP_CC_ROUNDS} "
+            "rounds — long-chain components would get wrong labels "
+            "(rounds needed ≈ graph diameter)"
+        )
+    return labs.select("node", F.col("lab").alias("comp"))
 
 
 def clusters_from_pairs(pairs: DataFrame) -> DataFrame:
@@ -90,8 +50,9 @@ def clusters_from_pairs(pairs: DataFrame) -> DataFrame:
     lowest doc_id, plus size and a joined member list (scalar output —
     registered queries never return array columns). Shared by every
     pair-producing dedup face (native LSH, pyspark.ml LSH), so the
-    keep/drop decision logic exists exactly once."""
-    comps = connected_components(pairs)
+    keep/drop decision logic exists exactly once; components come from
+    :func:`pair_components` (``cc_fixed`` plus the convergence guard)."""
+    comps = pair_components(pairs)
     return (
         comps.groupBy(F.col("comp").alias("canonical_doc"))
         .agg(
@@ -297,9 +258,9 @@ def _keep_best_oracle() -> str:
 @query("dedup_cluster_keep_best", oracle=_keep_best_oracle())
 def dedup_cluster_keep_best(spark, sf_dir: str) -> DataFrame:
     """Quality-canonical dedup policy: within each near-dup cluster
-    (connected components over the MinHash-LSH verified pairs — the
-    same shared CC core as :func:`dedup_clusters`), KEEP the member
-    the C4/Gopher heuristic gate ranks best — (passes_quality DESC,
+    (:func:`pair_components` over the MinHash-LSH verified pairs —
+    the same ``cc_fixed`` kernel as :func:`dedup_clusters`), KEEP the
+    member the C4/Gopher heuristic gate ranks best — (passes_quality DESC,
     n_words DESC, doc_id ASC), all exact ints so the pinned order is
     engine-portable — and emit the drop list. This is the policy
     production pipelines actually apply (keep the highest-quality
@@ -307,7 +268,7 @@ def dedup_cluster_keep_best(spark, sf_dir: str) -> DataFrame:
     the arbitrary-but-deterministic baseline.
 
     Shape: everything up to components is the shared banded-LSH /
-    min-label CC machinery (each stage's scale story documented at its
+    ``cc_fixed`` machinery (each stage's scale story documented at its
     face); the policy itself adds one broadcast-size join of component
     rows to per-doc quality ints and one per-component window —
     components are near-dup clusters, bounded by the LSH bucket cap.
@@ -320,7 +281,7 @@ def dedup_cluster_keep_best(spark, sf_dir: str) -> DataFrame:
     )
     from spark_streaming_with_debezium_spark.sources.tables import load_table
 
-    comps = connected_components(dedup_minhash_lsh(spark, sf_dir))
+    comps = pair_components(dedup_minhash_lsh(spark, sf_dir))
     d = load_table(spark, sf_dir, "documents")
     words = _words(F.col("text"))
     n_words = F.size(words).cast("bigint")
@@ -910,19 +871,19 @@ def split_leakage_safe_groups(spark, sf_dir: str) -> DataFrame:
     COMPUTED, structurally 0) next to ``leak_pairs_naive`` (the same
     count under the naive split).
 
-    Scale shape: components via the iterative min-label propagation of
-    :func:`connected_components` (O(diameter) shuffle joins, no driver
-    graph state); the corpus then LEFT-joins the component table once
-    on doc_id (components cover only docs that appear in pairs — far
-    smaller than the corpus) and everything downstream is two bounded
-    aggregates plus a 1-row leakage broadcast."""
+    Scale shape: components via :func:`pair_components` (``cc_fixed``:
+    O(diameter) broadcast-label rounds, no driver graph state); the
+    corpus then LEFT-joins the component table once on doc_id
+    (components cover only docs that appear in pairs — far smaller than
+    the corpus) and everything downstream is two bounded aggregates
+    plus a 1-row leakage broadcast."""
     from pyspark.sql import SparkSession  # noqa: F401 (signature parity)
 
     from spark_streaming_with_debezium_spark.llm.dedup import dedup_minhash_lsh
     from spark_streaming_with_debezium_spark.sources.tables import load_table
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    comps = connected_components(pairs)
+    comps = pair_components(pairs)
     d = load_table(spark, sf_dir, "documents")
     grp = F.coalesce(F.col("comp"), F.col("doc_id"))
     gsplit = F.when(

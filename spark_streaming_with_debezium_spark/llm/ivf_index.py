@@ -40,6 +40,7 @@ from spark_streaming_with_debezium_spark.llm.similarity import (
     cosine_prenormed,
     nearest_cells,
     norm,
+    probe_topk,
     train_centroids,
 )
 from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
@@ -378,26 +379,14 @@ class IvfIndex:
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")
         ).withColumn("qnrm", norm(F.col("qe")))
         m = self._manifest()
-        probes = nearest_cells(q, self._centroids(m), "qe", "qnrm", n_probe, "cell")
-        cells = {r.cell for r in probes.select("cell").distinct().collect()}
-        # only the probed cells' directories are scanned
-        data = self._read(m, cells)
-        # no distinct: one cell per vector, unique (query, cell) probes
-        cands = data.join(F.broadcast(probes), "cell").filter(
-            F.col("vec_id") != F.col("query_id")
-        )
-        scored = cands.withColumn(
-            "cos",
-            cosine_prenormed(
-                F.col("qe"), F.col("embedding"), F.col("qnrm"), F.col("nrm")
-            ),
-        ).select("query_id", "vec_id", "cos")
-        w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "vec_id", F.round("cos", 6).alias("cos_sim"), "rnk")
-        )
+
+        def probed_cells(probes: DataFrame) -> DataFrame:
+            # only the probed cells' directories are scanned
+            return self._read(
+                m, {r.cell for r in probes.select("cell").distinct().collect()}
+            )
+
+        return probe_topk(q, self._centroids(m), probed_cells, n_probe, k)
 
     def upsert(self, vectors: DataFrame, id_col: str = "vec_id",
                vec_col: str = "embedding") -> None:

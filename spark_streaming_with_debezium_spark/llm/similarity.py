@@ -20,6 +20,8 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -526,6 +528,37 @@ def nearest_cells(
     )
 
 
+def probe_topk(
+    queries: DataFrame,
+    cents: DataFrame,
+    read_cells: Callable[[DataFrame], DataFrame],
+    n_probe: int,
+    k: int,
+) -> DataFrame:
+    """IVF search tail: probe the ``n_probe`` cells nearest each query
+    (``query_id, qe, qnrm``), score by cosine the vectors
+    ``read_cells(probes)`` returns (``vec_id, embedding, nrm, cell``)
+    and keep the ``k`` best per query, ties to the lower vec_id.
+    ``read_cells`` sees the probes so a cell-partitioned store can read
+    only the probed cells."""
+    probes = nearest_cells(queries, cents, "qe", "qnrm", n_probe, "cell")
+    # no distinct needed: a vector lives in exactly one cell and probes
+    # are unique per (query, cell), so each (query, vec) scores once
+    cands = read_cells(probes).join(F.broadcast(probes), "cell").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    scored = cands.withColumn(
+        "cos",
+        cosine_prenormed(F.col("qe"), F.col("embedding"), F.col("qnrm"), F.col("nrm")),
+    ).select("query_id", "vec_id", "cos")
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "vec_id", F.round("cos", 6).alias("cos_sim"), "rnk")
+    )
+
+
 def ivf_topk_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-k with bounded-k sampled-KMeans
     centroids — the raw per-(query, neighbor) row face (the registered
@@ -549,22 +582,7 @@ def ivf_topk_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("nrm").alias("qnrm"),
     )
-    probes = nearest_cells(qs, cents, "qe", "qnrm", IVF_N_PROBE, "cell")
-    # no distinct needed: a vector lives in exactly one cell and probes
-    # are unique per (query, cell), so each (query, vec) scores once
-    cands = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cands.withColumn(
-        "cos",
-        cosine_prenormed(F.col("qe"), F.col("embedding"), F.col("qnrm"), F.col("nrm")),
-    ).select("query_id", "vec_id", "cos")
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos_sim"), "rnk")
-    )
+    return probe_topk(qs, cents, lambda _probes: assigned, IVF_N_PROBE, TOP_K)
 
 
 #: per-query recall floor for the ann_ivf_topk bound-check: the IVF

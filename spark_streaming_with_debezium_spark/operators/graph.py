@@ -466,10 +466,13 @@ def cc_fixed(fwd: DataFrame, n_iter: int) -> DataFrame:
     """(node, lab, stable) after ``n_iter`` rounds of synchronous
     min-label propagation over the UNDIRECTED graph given by ``fwd``
     (src, dst) — mirroring and self-loops are added here; ``stable`` =
-    1 iff the label did not move in the final round. Reusable core of
-    :func:`graph_connected_components` (see its docstring for the
-    scale shape and determinism argument); also drives the transitive
-    near-dup clusters in ``llm/dedup.py``.
+    1 iff the label did not move in the final round. The engine's one
+    connected-components kernel: :func:`graph_connected_components`
+    (see its docstring for the scale shape and determinism argument),
+    the transitive near-dup clusters in ``llm/dedup.py`` and, through
+    ``llm/cluster.py:pair_components``, the dedup cluster faces
+    (``dedup_clusters``, ``dedup_clusters_ml``,
+    ``dedup_cluster_keep_best``, ``split_leakage_safe_groups``).
 
     Early exit: min-label propagation is MONOTONE — once a round
     changes no label, every further round is the identity — so

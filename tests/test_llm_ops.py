@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.registry import load_all
@@ -283,11 +284,11 @@ def test_quantize_roundtrip_error_bounded(spark, sf_dir):
 
 
 def test_connected_components_vs_union_find(spark):
-    from spark_streaming_with_debezium_spark.llm.cluster import connected_components
+    from spark_streaming_with_debezium_spark.llm.cluster import pair_components
 
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 4), (22, 23)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r.node: r.comp for r in connected_components(pairs).collect()}
+    got = {r.node: r.comp for r in pair_components(pairs).collect()}
 
     # reference union-find
     parent = {}
@@ -306,6 +307,26 @@ def test_connected_components_vs_union_find(spark):
     expected = {n: find(n) for n in parent}
     assert got == expected
     assert got[4] == 1 and got[23] == 20 and got[11] == 10
+
+
+def test_dedup_clusters_fail_closed_past_round_budget(spark):
+    """A path graph labels in one round per edge: one edge short of the
+    dedup round budget converges, twice the budget must raise rather
+    than return the half-propagated labels."""
+    from spark_streaming_with_debezium_spark.llm.cluster import (
+        DEDUP_CC_ROUNDS,
+        clusters_from_pairs,
+    )
+
+    def path(n_edges):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n_edges)], "doc_a long, doc_b long"
+        )
+
+    (row,) = clusters_from_pairs(path(DEDUP_CC_ROUNDS - 1)).collect()
+    assert (row.canonical_doc, row.cluster_size) == (0, DEDUP_CC_ROUNDS)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        clusters_from_pairs(path(2 * DEDUP_CC_ROUNDS))
 
 
 def test_dedup_clusters_consistent_with_pairs(spark, sf_dir):

@@ -369,7 +369,7 @@ def test_group_split_colocates_every_near_dup_pair(spark, sf_dir):
     leakage columns must agree with an independent recount; doc counts
     must cover the corpus."""
     from spark_streaming_with_debezium_spark.llm.cluster import (
-        connected_components,
+        pair_components,
         split_leakage_safe_groups,
     )
     from spark_streaming_with_debezium_spark.llm.dedup import dedup_minhash_lsh
@@ -400,7 +400,7 @@ def test_group_split_colocates_every_near_dup_pair(spark, sf_dir):
     # and the group split really is constant within each component
     comps = {
         r.node: r.comp
-        for r in connected_components(
+        for r in pair_components(
             dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
         ).collect()
     }

@@ -10,6 +10,7 @@ batch visibly. The goldens replay exactly those DDL sequences.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -415,6 +416,19 @@ def test_streaming_drift_dead_letter_quarantine(spark, tmp_path):
     assert "missing: email" in dl[0]._drift_reason
     assert dl[0]._batch_id == 1  # checkpoint continues batch numbering
 
+    # crash between the quarantine write and the checkpoint commit: the
+    # restart replays batch 1, which must not quarantine it a second time
+    os.remove(os.path.join(ckpt, "commits", "1"))
+    crc = os.path.join(ckpt, "commits", ".1.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run_cdc_stream(
+        spark.readStream.schema(RAW_SCHEMA).json(str(src)),
+        SPEC, state, ckpt,
+        drift_policy="evolve", drift_dead_letter_dir=dlq,
+    ).awaitTermination()
+    assert spark.read.parquet(dlq).count() == 1
+
     # batch 3: clean again — stream still works on the same checkpoint
     (src / "b3.json").write_text(line(_env("c", {"id": 2, "email": "b@x"}, 2)))
     run_cdc_stream(
@@ -504,7 +518,9 @@ def test_quarantined_batch_replays_after_spec_fix(spark, tmp_path):
     dlq = str(tmp_path / "dlq")
     bad.withColumn("_batch_id", F.lit(0)).withColumn(
         "_drift_reason", F.lit("missing: email")
-    ).write.mode("append").parquet(dlq)
+    ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "_batch_id"
+    ).parquet(dlq)
 
     # operator decision: accept the narrowed table (id-only spec), new
     # state dir; replay the quarantined payload through batch_apply

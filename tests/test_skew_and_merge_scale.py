@@ -133,22 +133,14 @@ def test_rebucket_migrates_layout_and_persists_modulus(spark, tmp_path):
 def test_hot_key_batch_through_merge(spark, tmp_path):
     """Planted pathological skew (ONE key carries 50% of a 1M-event
     batch — the re-imported-row / null-key-default scenario) through
-    LWW compaction + ParquetStateTable.merge:
-
-    - the aggregate compaction (`compact_latest_agg`) must match the
-      window compaction exactly (total order per key), and
-    - its plan must show two-phase aggregation (map-side partial
-      reduction), the property that makes the hot key a non-event at
-      cluster scale, and
-    - end-to-end wall for the hot batch must stay within 2× of a
-      uniform batch of the same size.
+    LWW compaction (`compact_latest`, the kernel `batch_apply` runs) +
+    ParquetStateTable.merge: end-to-end wall for the hot batch must
+    stay within 2× of a uniform batch of the same size, and the hot
+    key must land its latest event.
     """
     import time
 
-    from spark_streaming_with_debezium_spark.cdc.compact import (
-        compact_latest,
-        compact_latest_agg,
-    )
+    from spark_streaming_with_debezium_spark.cdc.compact import compact_latest
 
     n = 1_000_000
     n_keys = 200_000
@@ -167,22 +159,7 @@ def test_hot_key_batch_through_merge(spark, tmp_path):
             F.lit(False).alias("deleted"),
         )
 
-    # Equivalence of the two compaction formulations on the hot batch.
-    hot = batch(hot=True)
-    agg_plan = compact_latest_agg(hot, ["k"], ["seq"])._jdf.queryExecution().executedPlan().toString()
-    assert agg_plan.count("HashAggregate") >= 2 or "partial_max_by" in agg_plan.lower(), agg_plan[:2000]
-    win_top = {
-        r["k"]: (r["seq"], r["v"])
-        for r in compact_latest(hot, ["k"], ["seq"]).filter(F.col("k") < 100).collect()
-    }
-    agg_top = {
-        r["k"]: (r["seq"], r["v"])
-        for r in compact_latest_agg(hot, ["k"], ["seq"]).filter(F.col("k") < 100).collect()
-    }
-    assert win_top == agg_top
-    assert agg_top[0] == (n - 2, (n - 2) * 3 % 1000)  # the hot key's latest
-
-    # End-to-end wall: compact_agg + merge, hot vs uniform.
+    # End-to-end wall: compact + merge, hot vs uniform.
     def run(tag: str, hot_flag: bool) -> float:
         state = ParquetStateTable(
             spark, str(tmp_path / f"st_{tag}"), ["k"], n_buckets=32
@@ -195,7 +172,7 @@ def test_hot_key_batch_through_merge(spark, tmp_path):
             )
         )
         t0 = time.time()
-        compacted = compact_latest_agg(batch(hot_flag), ["k"], ["seq"])
+        compacted = compact_latest(batch(hot_flag), ["k"], ["seq"])
         state.merge(compacted, data_cols=["seq", "v"])
         wall = time.time() - t0
         # key 0's latest event: hot → last even id (n-2); uniform → the
@@ -209,7 +186,7 @@ def test_hot_key_batch_through_merge(spark, tmp_path):
     t_hot = run("hot", True)
     assert t_hot <= 2.0 * t_uniform + 2.0, (
         f"hot-key batch {t_hot:.1f}s vs uniform {t_uniform:.1f}s — "
-        "skewed compaction is not being reduced map-side"
+        "the hot key straggles in compaction or merge"
     )
 
 
