@@ -524,6 +524,7 @@ def main() -> None:
                 ],
                 "cdc_merge_n_events": cdc_tp["n_events"],
                 "cdc_merge_jobs": cdc_tp.get("merge_jobs"),
+                "cdc_merge_tasks": cdc_tp.get("merge_tasks"),
                 "cdc_state_bytes_written": cdc_tp.get("state_bytes_written"),
                 # Full per-run distribution: a big spread is only
                 # interpretable if each run's wall time is visible next
@@ -535,6 +536,7 @@ def main() -> None:
                         "events_per_sec": r["events_per_sec"],
                         "wall_sec": r["wall_sec"],
                         "merge_jobs": r.get("merge_jobs"),
+                        "merge_tasks": r.get("merge_tasks"),
                         "probe_json_sec": r.get("probe_json_sec"),
                         "probe_write_sec": r.get("probe_write_sec"),
                         "probe_json_post_sec": r.get("probe_json_post_sec"),

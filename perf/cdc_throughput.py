@@ -168,7 +168,19 @@ def measure(spark, n: int) -> dict:
         finally:
             dt = time.perf_counter() - t0
             sc.setJobGroup("", "")
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        tracker = sc.statusTracker()
+        job_ids = tracker.getJobIdsForGroup(group)
+        n_jobs = len(job_ids)
+        # Tasks of the merge's stages: the write's task count is its
+        # fixed cost (one task per core, not per bucket). A stage a later
+        # job re-lists as its parent (AQE's final job) is skipped, so
+        # only stages that completed a task count.
+        stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+        n_tasks = sum(
+            info.numTasks
+            for info in map(tracker.getStageInfo, stage_ids)
+            if info is not None and info.numCompletedTasks
+        )
         # POST-run probes: the pre-run pair only attributes stalls
         # already in progress when the merge starts — a stall that
         # BEGINS mid-merge (observed: 62.9 s wall, 0.44/1.04 s pre-
@@ -196,6 +208,7 @@ def measure(spark, n: int) -> dict:
             "events_per_sec": int(n / dt),
             "final_state_rows": final_rows,
             "merge_jobs": n_jobs,
+            "merge_tasks": n_tasks,
             "state_bytes_written": state_bytes,
             "probe_json_sec": probe_json_sec,
             "probe_json_rows": probe_rows,

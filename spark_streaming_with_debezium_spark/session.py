@@ -12,6 +12,10 @@ target and merely *scaled down* for local testing:
 - Session timezone pinned to UTC so timestamps compare bit-for-bit
   against UTC-naive parquet readers (DuckDB oracle).
 - Arrow enabled: every Pandas-UDF hop is vectorized batch transfer.
+- A read of up to 256 paths (a state read names one directory per
+  bucket) is listed on the driver, not by a Spark listing job.
+- Driver heap: half the host's physical memory unless
+  ``SPARK_GRAFT_DRIVER_MEM`` says otherwise.
 """
 
 from __future__ import annotations
@@ -21,6 +25,23 @@ import os
 from pyspark.sql import SparkSession
 
 _DEFAULT_SHUFFLE_PARTITIONS = max(8, os.cpu_count() or 8)
+#: Manifest stores are read by naming their directories: a 64-bucket
+#: state read is 64 paths. At Spark's default threshold of 32 such a
+#: read schedules a listing job with one task per path (~400 ms at two
+#: cores, paid by every merge and scan); up to this count the driver
+#: lists them itself (~1 ms a directory locally). Above it a listing
+#: job spreads the per-directory round trips of a remote store over
+#: the executors, where serial listing on the driver would cost more.
+#: Only the session conf takes effect: a per-read option is ignored.
+_DRIVER_LISTING_PATHS = 256
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory: the local driver JVM holds the
+    executors too, and a larger heap lets it grow until the kernel
+    kills it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}m"
 
 
 def get_spark(
@@ -49,7 +70,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(_DRIVER_LISTING_PATHS),
+        )
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

@@ -16,9 +16,10 @@ the next manifest under a NEW name (a published manifest is never
 overwritten), then deletes everything under the root that the new
 manifest does not name: superseded directories, older manifests and
 whatever a crashed commit left behind. Readers open the newest manifest
-and read only what it names, by path. A crash at any step therefore
-leaves the old state or the new one, and opening a store recovers
-nothing. This is the atomic per-batch output commit Structured
+and read only what it names, by path (a read of up to 256 directories
+is listed on the driver, see ``session.get_spark``). A crash at any
+step therefore leaves the old state or the new one, and opening a store
+recovers nothing. This is the atomic per-batch output commit Structured
 Streaming's exactly-once sinks need, and what Delta's transaction log
 gives the reference (`StreamingJobExecutor.scala:47-61`), on plain
 parquet and through the eight :class:`StateFS` calls only.
@@ -97,7 +98,9 @@ class Manifest:
     def write_partitioned(self, df, tag: str, col: str) -> dict[str, str]:
         """Write the Spark DataFrame ``df`` partitioned by ``col`` into a
         new directory; returns ``{value of col: directory}`` of each
-        partition written (an empty one writes no directory)."""
+        partition written (an empty one writes no directory). Each task
+        writes one file per value it holds, so ``df`` hash-partitioned
+        on ``col`` gives one file per directory whatever its task count."""
         out = self.new_dir(tag)
         df.write.mode("overwrite").partitionBy(col).parquet(out)
         return {

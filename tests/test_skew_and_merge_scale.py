@@ -1,13 +1,18 @@
 """Scale-mechanics tests: salted join exactness, bucketed-merge I/O
-pruning (only touched buckets rewritten)."""
+pruning (only touched buckets rewritten), and the state table's fixed
+costs counted in Spark jobs and tasks (one write task per core, no
+listing job for a read)."""
 
 from __future__ import annotations
 
+import contextlib
+import itertools
+import os
 import re
 
 from pyspark.sql import functions as F
 
-from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
+from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable, apply_changes
 from spark_streaming_with_debezium_spark.operators.skew import salted_join
 from spark_streaming_with_debezium_spark.sources.tables import load_table
 from spark_streaming_with_debezium_spark.storage.manifest import Manifest
@@ -280,3 +285,111 @@ def test_asof_salted_hot_key_boundaries(spark, tmp_path):
     # after the same-date pair, the higher orderkey (3) is carried
     first_after_700 = min(k for k in by_event if by_event[k][2] >= ts(700) and by_event[k][1] == 7)
     assert by_event[first_after_700][3] == 3
+
+
+_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def _jobs(spark):
+    """Collect the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    group = f"scale_test_{next(_GROUPS)}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _write_stage_tasks(spark, job_ids) -> int:
+    """Tasks of the write stage: the result stage of the last job (the
+    commit that follows the write runs no Spark job)."""
+    tracker = spark.sparkContext.statusTracker()
+    stage = max(tracker.getJobInfo(job_ids[-1]).stageIds)
+    return tracker.getStageInfo(stage).numTasks
+
+
+def _files_per_bucket(state) -> dict[str, int]:
+    return {
+        b: sum(f.endswith(".parquet") for f in os.listdir(d))
+        for b, d in Manifest.open(state.fs, state.path).named("bucket/").items()
+    }
+
+
+def _state_64(spark, tmp_path, rows=2000):
+    state = ParquetStateTable(spark, str(tmp_path / "st64"), ["id"], n_buckets=64)
+    state.init(
+        spark.range(rows).select("id", F.concat(F.lit("v"), F.col("id")).alias("val"))
+    )
+    return state
+
+
+def test_merge_of_every_bucket_writes_one_task_per_core(spark, tmp_path):
+    """A merge touching all 64 buckets runs its write stage with at most
+    one task per core, still leaves exactly one file per bucket, and
+    yields what ``apply_changes`` yields over the old state."""
+    state = _state_64(spark, tmp_path)
+    old = state.read().collect()
+    before = Manifest.open(state.fs, state.path).named("bucket/")
+    # updates of every third key, deletes of every seventh, 300 inserts
+    changes = spark.createDataFrame(
+        [(i, f"w{i}", False) for i in range(0, 2000, 3) if i % 7]
+        + [(i, None, True) for i in range(0, 2000, 7)]
+        + [(i, f"n{i}", False) for i in range(2000, 2300)],
+        "id long, val string, deleted boolean",
+    )
+    expected = apply_changes(
+        spark.createDataFrame(old, "id long, val string"), changes, ["id"]
+    ).collect()
+
+    with _jobs(spark) as job_ids:
+        state.merge(changes)
+    after = Manifest.open(state.fs, state.path).named("bucket/")
+    assert set(after) == set(before) and all(after[b] != before[b] for b in after)
+    assert _write_stage_tasks(spark, job_ids) <= spark.sparkContext.defaultParallelism
+    assert set(_files_per_bucket(state).values()) == {1}
+    assert sorted(map(tuple, state.read().collect())) == sorted(map(tuple, expected))
+
+
+def test_state_read_schedules_no_listing_job(spark, tmp_path):
+    """``read()`` names all 64 bucket directories; the driver lists
+    them, so building the DataFrame runs no Spark job."""
+    state = _state_64(spark, tmp_path)
+    with _jobs(spark) as job_ids:
+        df = state.read()
+    assert job_ids == []
+    assert df.count() == 2000
+
+
+def test_lookup_duplicate_keys_in_three_jobs(spark, tmp_path):
+    """Duplicated lookup keys return each row once, in at most 3 jobs
+    (no ``distinct()`` of the keys or of the bucket ids)."""
+    state = _state_64(spark, tmp_path)
+    keys = spark.createDataFrame(
+        [(k,) for k in (5, 5, 5, 77, 77, 1999, 4242, 4242)], "id long"
+    )
+    with _jobs(spark) as job_ids:
+        got = [tuple(r) for r in state.lookup(keys).collect()]
+    assert sorted(got) == [(5, "v5"), (77, "v77"), (1999, "v1999")]
+    assert len(job_ids) <= 3, job_ids
+
+
+def test_init_and_rebucket_write_one_file_per_bucket(spark, tmp_path):
+    """``init`` and ``rebucket`` write with one task per core too, and
+    each bucket is still one file."""
+    dp = spark.sparkContext.defaultParallelism
+    with _jobs(spark) as job_ids:
+        state = _state_64(spark, tmp_path)
+    assert _write_stage_tasks(spark, job_ids) <= dp
+    files = _files_per_bucket(state)
+    assert len(files) == 64 and set(files.values()) == {1}
+
+    with _jobs(spark) as job_ids:
+        state.rebucket(16)
+    assert _write_stage_tasks(spark, job_ids) <= dp
+    files = _files_per_bucket(state)
+    assert len(files) == 16 and set(files.values()) == {1}
+    assert state.read().count() == 2000
